@@ -84,3 +84,15 @@ def test_blocked_weighted_pagerank_matches_shuffle(spark):
     assert set(sh) == set(bl)
     for v in sh:
         assert abs(sh[v] - bl[v]) < 1e-12, (v, sh[v], bl[v])
+
+
+def test_cc_blocked_path_honours_max_iter(spark):
+    """connected_components hands its max_iter to the blocked tier: a
+    20-vertex path needs two blocked rounds (one to collapse the chain,
+    one to see no change), so a cap of one stops it unconverged."""
+    e = make_edges(spark, [(i, i + 1) for i in range(19)])
+    capped = connected_components(e, max_iter=1, tier="blocked")
+    assert capped.iterations == 1 and not capped.converged
+    full = connected_components(e, max_iter=60)  # auto takes the blocked tier
+    assert full.converged and full.iterations == 2
+    assert {r.component for r in full.state.collect()} == {0}

@@ -79,3 +79,51 @@ def test_graph_subgraph_and_delta_methods(spark):
         spark.createDataFrame([(1, 3)], "src long, dst long")
     )
     assert added2 == 1  # {1,3} closes {1,2,3}
+
+
+def test_graph_decides_iterative_tier_once(spark, monkeypatch):
+    """The facade passes the tier it chose down to CC and LP: a pinned
+    tier asks the planner nothing, auto asks it once per call, and a
+    pinned "shuffle" runs the shuffle tier even on a graph that fits."""
+    from triangle_counting_spark.graph import Graph
+    from triangle_counting_spark.operators import components, labelprop
+    from triangle_counting_spark.plans import planner
+
+    calls = []
+    real = planner.choose_iterative_tier
+    monkeypatch.setattr(
+        planner, "choose_iterative_tier", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    ran = []
+    for mod, name in ((components, "connected_components_blocked"),
+                      (labelprop, "label_propagation_blocked")):
+        blocked_op = getattr(mod, name)
+        monkeypatch.setattr(
+            mod, name, lambda *a, _f=blocked_op, _n=name, **k: ran.append(_n) or _f(*a, **k)
+        )
+    g = Graph(make_edges(spark, TINY["two_triangles"][0]))
+    cc = {r.v: r.component for r in g.connected_components(tier="shuffle").state.collect()}
+    lp = {r.v: r.label for r in g.label_propagation(2, tier="shuffle").collect()}
+    assert calls == [] and ran == []
+    assert cc == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 3}
+    assert lp == cc
+    g.connected_components()
+    g.label_propagation(2)
+    assert len(calls) == 2
+    assert ran == ["connected_components_blocked", "label_propagation_blocked"]
+
+
+def test_bcast_cutoff_override_above_hard_cap_raises(spark):
+    from triangle_counting_spark.plans.planner import BCAST_HARD_CAP_EDGES, bcast_max_edges
+
+    key = "spark.tcs.bcastMaxEdges"
+    try:
+        spark.conf.set(key, str(BCAST_HARD_CAP_EDGES))
+        assert bcast_max_edges(spark) == BCAST_HARD_CAP_EDGES
+        spark.conf.set(key, "1000")
+        assert bcast_max_edges(spark) == 1000
+        spark.conf.set(key, str(BCAST_HARD_CAP_EDGES + 1))
+        with pytest.raises(ValueError, match="hard cap"):
+            bcast_max_edges(spark)
+    finally:
+        spark.conf.unset(key)

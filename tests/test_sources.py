@@ -103,3 +103,39 @@ def test_strategies_agree_on_rmat(spark):
         for s in ("sql", "join", "merge", "probe", "bcast", "level")
     }
     assert len(set(counts.values())) == 1, counts
+
+
+def _inverse_cdf_repos(spark, n_files, n_repos, seed, zipf_exponent=1.2):
+    """Pure-Python inverse CDF over the generator's per-row uniform:
+    the first repo r with u < cum[r], else the last repo."""
+    weights = [1.0 / (r + 1) ** zipf_exponent for r in range(n_repos)]
+    total, acc, cum = sum(weights), 0.0, []
+    for w in weights:
+        acc += w / total
+        cum.append(acc)
+    u = spark.range(n_files).select(
+        "id", (F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(1_000_000)) / 1_000_000.0).alias("u")
+    )
+    out = {}
+    for r in u.collect():
+        out[r["id"]] = next((i for i, c in enumerate(cum) if r["u"] < c), n_repos - 1)
+    return out
+
+
+def test_files_repo_assignment_matches_inverse_cdf(spark):
+    for n_files, n_repos, seed in ((300, 20, 7), (60, 20, 99), (400, 12, 42), (200, 8, 42)):
+        want = _inverse_cdf_repos(spark, n_files, n_repos, seed)
+        got = {
+            int(r["path"].split("file_")[1].split(".")[0]): int(r["repo"].split("-")[1])
+            for r in synthetic_files(spark, n_files, n_repos, seed).select("repo", "path").collect()
+        }
+        assert got == want, (n_files, n_repos, seed)
+
+
+def test_files_thousand_repos(spark):
+    """One constant-depth expression assigns repos: 1,000 repos build and
+    count (a nested CASE per repo overflowed the analyzer's stack)."""
+    files = synthetic_files(spark, 30000, 1000)
+    assert files.count() == 30000
+    repos = files.select("repo").distinct().count()
+    assert 100 < repos <= 1000

@@ -175,7 +175,7 @@ def embedding_neardup_pairs(
     import numpy as np
     import pandas as pd
 
-    from ..plans.blocked import _ship_arrays
+    from ..plans.blocked import _ship_arrays, fan_out
 
     spark = df.sparkSession
     pdf = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("emb")).toPandas()
@@ -185,7 +185,7 @@ def embedding_neardup_pairs(
     M = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["emb"]])
     files = _ship_arrays(spark, {"ids": ids, "mat": M})
     n = len(ids)
-    n_slices = max(spark.sparkContext.defaultParallelism, 1)
+    n_slices = fan_out(spark)
     thr = float(threshold)
 
     def kernel(batches):

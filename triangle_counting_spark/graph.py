@@ -269,7 +269,7 @@ class Graph:
             )
         from .operators.components import connected_components
 
-        return connected_components(self.edges, **kw)
+        return connected_components(self.edges, tier="shuffle", **kw)
 
     def label_propagation(self, iterations: int = 3, tier: str = "auto") -> DataFrame:
         """(v, label) after ``iterations`` synchronous rounds."""
@@ -281,7 +281,7 @@ class Graph:
             ).state
         from .operators.labelprop import label_propagation_fixed
 
-        return label_propagation_fixed(self.edges, iterations)
+        return label_propagation_fixed(self.edges, iterations, tier="shuffle")
 
     def maximal_independent_set(self, tier: str = "auto") -> DataFrame:
         from .operators.mis import maximal_independent_set

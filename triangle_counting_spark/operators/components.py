@@ -74,7 +74,13 @@ def connected_components(
 
         tier = choose_iterative_tier(edges)
     if tier == "blocked":
-        return connected_components_blocked(edges, checkpoint_dir=checkpoint_dir)
+        return connected_components_blocked(
+            edges,
+            max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+            resume=resume,
+        )
 
     ce = canonical_edges(edges)
     # joined every iteration — persist once, pre-partitioned on SRC so only
@@ -191,14 +197,14 @@ def connected_components_blocked(
     import numpy as np
     import pandas as pd
 
-    from ..plans.blocked import blocked_rounds, build_blocked
+    from ..plans.blocked import blocked_rounds, build_blocked, fan_out
     from .orientation import canonical_edges as _canon
 
     spark = edges.sparkSession
     ce = edges.select(SRC, DST) if assume_canonical else _canon(edges)
     pdf = ce.toPandas()
     if n_blocks is None:
-        n_blocks = max(spark.sparkContext.defaultParallelism, 1)
+        n_blocks = fan_out(spark, 2 * len(pdf))
     g = build_blocked(pdf, n_blocks)
     n = len(g.verts)
     if n == 0:

@@ -131,14 +131,14 @@ def label_propagation_blocked(
     import numpy as np
     import pandas as pd
 
-    from ..plans.blocked import _ship_arrays, build_blocked
+    from ..plans.blocked import _ship_arrays, build_blocked, fan_out
     from .orientation import canonical_edges as _canon
 
     spark = edges.sparkSession
     ce = edges.select(SRC, DST) if assume_canonical else _canon(edges)
     pdf = ce.toPandas()
     if n_blocks is None:
-        n_blocks = max(spark.sparkContext.defaultParallelism, 1)
+        n_blocks = fan_out(spark, 2 * len(pdf))
     g = build_blocked(pdf, n_blocks)
     n = len(g.verts)
     if n == 0:

@@ -268,7 +268,7 @@ def pagerank_blocked(
     """
     import numpy as np
 
-    from ..plans.blocked import blocked_rounds, build_blocked
+    from ..plans.blocked import blocked_rounds, build_blocked, fan_out
 
     import pandas as pd
 
@@ -287,7 +287,7 @@ def pagerank_blocked(
         ce = edges.select(SRC, DST) if assume_canonical else canonical_edges(edges)
     pdf = ce.toPandas()
     if n_blocks is None:
-        n_blocks = max(spark.sparkContext.defaultParallelism, 1)
+        n_blocks = fan_out(spark, 2 * len(pdf))
     # the gather weight (1/outdeg or w/Σw) lives on the edges, so the
     # broadcast state is the rank vector itself (checkpoint/resume stays
     # trivially correct)

@@ -60,6 +60,18 @@ from .orientation import (
 _KERNEL_SCHEMA = "partial long"
 
 
+def _sum_slices(spark, kernel, k: int) -> int:
+    """Run a broadcast-CSR ``kernel`` over slice ids ``0..k-1``, one per
+    task, and sum its int64 partials on the driver: the k partial rows
+    come back in the same job, with no aggregate stage after it."""
+    rows = (
+        spark.range(0, k, 1, numPartitions=k)
+        .mapInPandas(kernel, schema=_KERNEL_SCHEMA)
+        .collect()
+    )
+    return sum(int(r["partial"]) for r in rows)
+
+
 def _compact_ids(np, s_raw, d_raw, m_in):
     """Map raw vertex ids to compact int32 indices.
 
@@ -164,9 +176,7 @@ def _count_sql(oriented: DataFrame) -> DataFrame:
         ).collect()[0]
     finally:
         adj.unpersist()
-    return oriented.sparkSession.createDataFrame(
-        [(int(row["triangles"]),)], "triangles long"
-    )
+    return _one_row(oriented.sparkSession, (int(row["triangles"]),), "triangles long")
 
 
 def _oriented_triangles(oriented: DataFrame) -> DataFrame:
@@ -344,9 +354,7 @@ def _count_kernel(oriented: DataFrame, kernel: str) -> DataFrame:
         ).collect()[0]
     finally:
         adj.unpersist()
-    return oriented.sparkSession.createDataFrame(
-        [(int(row["triangles"]),)], "triangles long"
-    )
+    return _one_row(oriented.sparkSession, (int(row["triangles"]),), "triangles long")
 
 
 def _count_partitioned(oriented: DataFrame, n_blocks: int | None = None) -> DataFrame:
@@ -384,8 +392,10 @@ def _count_partitioned(oriented: DataFrame, n_blocks: int | None = None) -> Data
         # MORE blocks than that only grows replication (Σ min(indeg, P)):
         # measured 531M -> 175M shipped elements going 64 -> 16 blocks at
         # RMAT-20 (scripts/part_profile.py)
+        from ..plans.blocked import EDGES_PER_BLOCK
+
         n_blocks = max(
-            spark.sparkContext.defaultParallelism, (m_edges + (1 << 22) - 1) >> 22, 4
+            spark.sparkContext.defaultParallelism, -(-m_edges // EDGES_PER_BLOCK), 4
         )
     oriented = _maybe_narrow(oriented, mn_id, mx_id)
     e = oriented.select(
@@ -591,8 +601,10 @@ class BroadcastCSRTriangles:
 
     def count(self) -> int:
         """Run the probe kernel over the prebuilt broadcast CSR."""
+        from ..plans.blocked import fan_out
+
         files = self._files
-        _k = max(self.spark.sparkContext.defaultParallelism * 4, 1)
+        _k = fan_out(self.spark)
 
         def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             import numpy as np  # noqa: PLC0415
@@ -634,21 +646,12 @@ class BroadcastCSRTriangles:
                         mask[nbrs] = False
             yield pd.DataFrame({"partial": [total]})
 
-        slices = self.spark.range(0, _k, 1, numPartitions=_k)
-        partials = slices.mapInPandas(kernel, schema=_KERNEL_SCHEMA)
-        row = partials.agg(
-            F.coalesce(F.sum("partial"), F.lit(0)).cast("long").alias("triangles")
-        ).collect()[0]
-        return int(row["triangles"])
+        return _sum_slices(self.spark, kernel, _k)
 
     def unpersist(self) -> None:
-        pass  # mmap'd files are cleaned with the Spark temp dirs
-
-
-def _count_broadcast_csr(edges: DataFrame) -> DataFrame:
-    counter = BroadcastCSRTriangles(edges, assume_canonical=True)
-    t = counter.count()
-    return edges.sparkSession.createDataFrame([(t,)], "triangles long")
+        # nothing is cached in Spark; the shipped .npy files stay in the
+        # tcs_blocked_* dir _ship_arrays made — no one removes that dir yet
+        pass
 
 
 def _level_c1_bcast(horiz: DataFrame, cross: DataFrame) -> int:
@@ -681,12 +684,12 @@ def _level_c1_bcast(horiz: DataFrame, cross: DataFrame) -> int:
     rowptr[1:] = np.cumsum(np.bincount(es, minlength=n))
 
     spark = horiz.sparkSession
-    from ..plans.blocked import _ship_arrays
+    from ..plans.blocked import _ship_arrays, fan_out
 
     files = _ship_arrays(
         spark, {"rowptr": rowptr, "colind": colind, "hu": hui, "hv": hvi}
     )
-    _k = max(spark.sparkContext.defaultParallelism * 2, 1)
+    _k = fan_out(spark)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np  # noqa: PLC0415
@@ -739,12 +742,7 @@ def _level_c1_bcast(horiz: DataFrame, cross: DataFrame) -> int:
                     total += int(np.count_nonzero(key_b[pos] == key_a))
         yield pd.DataFrame({"partial": [total]})
 
-    slices = spark.range(0, _k, 1, numPartitions=_k)
-    partials = slices.mapInPandas(kernel, schema=_KERNEL_SCHEMA)
-    row = partials.agg(
-        F.coalesce(F.sum("partial"), F.lit(0)).cast("long").alias("p")
-    ).collect()[0]
-    return int(row["p"])
+    return _sum_slices(spark, kernel, _k)
 
 
 def _count_level(edges: DataFrame) -> DataFrame:
@@ -893,7 +891,7 @@ def _count_level(edges: DataFrame) -> DataFrame:
             cross_sym.unpersist()
     finally:
         labeled.unpersist()
-    return spark.createDataFrame([(int(c1 + c2),)], "triangles long")
+    return _one_row(spark, (int(c1 + c2),), "triangles long")
 
 
 def write_oriented_adjacency(
@@ -965,9 +963,7 @@ def triangle_count_from_adjacency(adj: DataFrame) -> DataFrame:
         .cast("long")
         .alias("triangles")
     ).collect()[0]
-    return adj.sparkSession.createDataFrame(
-        [(int(row["triangles"]),)], "triangles long"
-    )
+    return _one_row(adj.sparkSession, (int(row["triangles"]),), "triangles long")
 
 
 def _one_row(spark, row: tuple, schema: str):
@@ -980,11 +976,11 @@ def _one_row(spark, row: tuple, schema: str):
     46 s -> 458 s on the sf0.01 gate). And coalesce(1) over a local
     relation is NOT the fix: it forces a real Python-RDD job per collect
     (~5 s each on this box — the pickled local rows lose the
-    LocalTableScan driver-only path). range(1) + literal projection is a
-    pure-JVM 1-partition scan with known tiny stats; the broadcast hint
-    makes any join against it a BroadcastNestedLoopJoin. Measured: 1-row
-    collect 5.0 s (coalesce) / 0.4 s (plain) / 0.05 s (this); the 6-way
-    crossJoin 0.2 s."""
+    LocalTableScan driver-only path). A 1-partition range + literal
+    projection is a pure-JVM 1-task scan with known tiny stats; the
+    broadcast hint makes any join against it a BroadcastNestedLoopJoin.
+    Measured: 1-row collect 5.0 s (coalesce) / 0.4 s (plain) / 0.05 s
+    (this); the 6-way crossJoin 0.2 s."""
     from pyspark.sql.functions import broadcast, lit
     from pyspark.sql.types import _parse_datatype_string
 
@@ -992,7 +988,7 @@ def _one_row(spark, row: tuple, schema: str):
     cols = [
         lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, st.fields)
     ]
-    return broadcast(spark.range(1).select(*cols))
+    return broadcast(spark.range(0, 1, 1, numPartitions=1).select(*cols))
 
 
 def _canonical_select(edges: DataFrame) -> DataFrame:
@@ -1064,13 +1060,13 @@ def _delta_bcast_arrays(spark, s_raw, d_raw, t_raw) -> int:
     du = s[is_d].astype(np.int64)
     dv = d[is_d].astype(np.int64)
 
-    from ..plans.blocked import _ship_arrays
+    from ..plans.blocked import _ship_arrays, fan_out
 
     files = _ship_arrays(
         spark,
         {"rowptr": rowptr, "colind": colind, "tags": tags, "du": du, "dv": dv},
     )
-    _k = max(spark.sparkContext.defaultParallelism * 2, 1)
+    _k = fan_out(spark)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np  # noqa: PLC0415
@@ -1133,12 +1129,7 @@ def _delta_bcast_arrays(spark, s_raw, d_raw, t_raw) -> int:
                     )
         yield pd.DataFrame({"partial": [total]})
 
-    slices = spark.range(0, _k, 1, numPartitions=_k)
-    partials = slices.mapInPandas(kernel, schema=_KERNEL_SCHEMA)
-    row = partials.agg(
-        F.coalesce(F.sum("partial"), F.lit(0)).cast("long").alias("p")
-    ).collect()[0]
-    return int(row["p"]) // 6
+    return _sum_slices(spark, kernel, _k) // 6
 
 
 def triangle_count_delta(
@@ -1269,7 +1260,7 @@ def triangle_count_delta(
         total = int(round(row["w"] / 12.0))
     finally:
         sym.unpersist()
-    return spark.createDataFrame([(total,)], "triangles_added long")
+    return _one_row(spark, (total,), "triangles_added long")
 
 
 def triangle_count_estimate(
@@ -1304,8 +1295,9 @@ def triangle_count_estimate(
         )
     t = triangle_count(sampled, "sql", assume_canonical=True).collect()[0]["triangles"]
     est = int(round(t / p**3))
-    return edges.sparkSession.createDataFrame(
-        [(est, int(t))], "triangles_estimate long, sampled_triangles long"
+    return _one_row(
+        edges.sparkSession, (est, int(t)),
+        "triangles_estimate long, sampled_triangles long",
     )
 
 
@@ -1345,8 +1337,8 @@ def triangle_count(
         fn = _count_join
     elif strategy == "bcast":
         # orientation happens in-kernel (numpy); feed canonical edges
-        count = _count_broadcast_csr(ce).collect()[0]["triangles"]
-        return edges.sparkSession.createDataFrame([(int(count),)], "triangles long")
+        count = BroadcastCSRTriangles(ce, assume_canonical=True).count()
+        return _one_row(edges.sparkSession, (count,), "triangles long")
     elif strategy == "level":
         return _count_level(ce)
     elif strategy in _KERNELS:
@@ -1359,8 +1351,7 @@ def triangle_count(
         count = fn(oriented).collect()[0]["triangles"]
     finally:
         oriented.unpersist()
-    spark = edges.sparkSession
-    return spark.createDataFrame([(int(count),)], "triangles long")
+    return _one_row(edges.sparkSession, (int(count),), "triangles long")
 
 
 def triangles_per_vertex(edges: DataFrame) -> DataFrame:
@@ -1449,10 +1440,10 @@ def _four_cycle_bcast(ce: DataFrame) -> int:
     rowptr = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(deg, out=rowptr[1:])
 
-    from ..plans.blocked import _ship_arrays
+    from ..plans.blocked import _ship_arrays, fan_out
 
     files = _ship_arrays(spark, {"rowptr": rowptr, "colind": colind})
-    _k = max(spark.sparkContext.defaultParallelism * 4, 1)
+    _k = fan_out(spark)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np  # noqa: PLC0415
@@ -1518,12 +1509,7 @@ def _four_cycle_bcast(ce: DataFrame) -> int:
                     total += int((runs * (runs - 1)).sum())
         yield pd.DataFrame({"partial": [total]})
 
-    slices = spark.range(0, _k, 1, numPartitions=_k)
-    partials = slices.mapInPandas(kernel, schema=_KERNEL_SCHEMA)
-    row = partials.agg(
-        F.coalesce(F.sum("partial"), F.lit(0)).cast("long").alias("p")
-    ).collect()[0]
-    return int(row["p"]) // 4
+    return _sum_slices(spark, kernel, _k) // 4
 
 
 def four_cycle_count(
@@ -1663,13 +1649,13 @@ def _four_clique_bcast(ce: DataFrame) -> int:
     rowptr = np.zeros(n + 1, dtype=np.int64)
     rowptr[1:] = np.cumsum(np.bincount(os_, minlength=n))
 
-    from ..plans.blocked import _ship_arrays
+    from ..plans.blocked import _ship_arrays, fan_out
 
     files = _ship_arrays(
         spark, {"rowptr": rowptr, "colind": od_.astype(np.int32),
                 "esrc": os_.astype(np.int32)}
     )
-    _k = max(spark.sparkContext.defaultParallelism * 2, 1)
+    _k = fan_out(spark)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np  # noqa: PLC0415
@@ -1757,12 +1743,7 @@ def _four_clique_bcast(ce: DataFrame) -> int:
                         total += int(np.count_nonzero(s_key[pos2] == probe))
         yield pd.DataFrame({"partial": [total]})
 
-    slices = spark.range(0, _k, 1, numPartitions=_k)
-    partials = slices.mapInPandas(kernel, schema=_KERNEL_SCHEMA)
-    row = partials.agg(
-        F.coalesce(F.sum("partial"), F.lit(0)).cast("long").alias("p")
-    ).collect()[0]
-    return int(row["p"])
+    return _sum_slices(spark, kernel, _k)
 
 
 def four_clique_count(
@@ -1846,6 +1827,4 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     finally:
         ce.unpersist()
     val = 3.0 * t / (w if w and w > 0 else 1)
-    return edges.sparkSession.createDataFrame(
-        [(float(val),)], "global_clustering double"
-    )
+    return _one_row(edges.sparkSession, (float(val),), "global_clustering double")

@@ -49,7 +49,10 @@ def bcast_max_edges(spark) -> int:
 
     Resolution order: explicit ``spark.tcs.bcastMaxEdges`` conf override
     (malformed values raise — a silently ignored safety cap is worse than
-    no cap) → 10% of min(driver JVM max heap, ``spark.executor.memory``
+    no cap — and so does a value above :data:`BCAST_HARD_CAP_EDGES`: the
+    broadcast tiers pack compact ids into 31 bits and ship int32
+    ``colind`` arrays, which a bigger graph would overflow silently) →
+    10% of min(driver JVM max heap, ``spark.executor.memory``
     when set) / 16 B, clamped to [20M floor, 256M hard cap]. The executor
     term matters in client mode: a 64 GB driver next to 4 GB executors
     must NOT size executor broadcasts from the driver's heap.
@@ -59,7 +62,14 @@ def bcast_max_edges(spark) -> int:
     except Exception:  # noqa: BLE001 — connect mode without conf access
         override = None
     if override is not None:
-        return int(override)  # ValueError on garbage, deliberately loud
+        cap = int(override)  # ValueError on garbage, deliberately loud
+        if cap > BCAST_HARD_CAP_EDGES:
+            raise ValueError(
+                f"spark.tcs.bcastMaxEdges={cap} is above the broadcast tiers' "
+                f"hard cap of {BCAST_HARD_CAP_EDGES} edges (31-bit id packing, "
+                "int32 CSR columns)"
+            )
+        return cap
     try:
         mem = int(spark._jvm.java.lang.Runtime.getRuntime().maxMemory())
     except Exception:  # noqa: BLE001 — connect-mode / no JVM handle

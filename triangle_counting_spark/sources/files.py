@@ -36,13 +36,16 @@ def synthetic_files(
     for w in weights:
         acc += w / total
         cum.append(acc)
-    # CASE WHEN u < cum[0] THEN 0 WHEN u < cum[1] THEN 1 ... (broadcast-free)
-    df = spark.range(n_files).select(F.col("id"))
-    u = (F.pmod(F.xxhash64(F.col("id"), F.lit(seed)), F.lit(1_000_000)) / 1_000_000.0)
-    repo_idx = F.lit(n_repos - 1)
-    expr = repo_idx
-    for r in range(n_repos - 2, -1, -1):
-        expr = F.when(u < F.lit(cum[r]), F.lit(r)).otherwise(expr)
+    # repo = the first r with u < cum[r] = #{r : cum[r] <= u} (cum is
+    # sorted), capped at the last repo: one constant-depth expression over
+    # a literal array, where a nested CASE per repo overflowed the
+    # analyzer's stack at 1,000 repos
+    u = F.pmod(F.xxhash64(F.col("id"), F.lit(seed)), F.lit(1_000_000)) / 1_000_000.0
+    below = F.filter(F.array(*[F.lit(c) for c in cum]), lambda c: c <= u)
+    df = spark.range(n_files).select(
+        "id", F.least(F.lit(n_repos - 1), F.size(below)).alias("_repo")
+    )
+    expr = F.col("_repo")
     h = F.xxhash64(F.col("id"), F.lit(seed + 1))
     return df.select(
         F.format_string("org/repo-%04d", expr).alias("repo"),
