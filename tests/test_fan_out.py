@@ -196,3 +196,38 @@ def test_blocked_default_is_one_block_below_edges_per_block(spark):
     # the edge collect of a locally built input is one Python stage; each
     # of the two rounds adds one single-task stage
     assert py[-2:] == [1, 1], py
+
+
+def test_shipped_array_dirs_are_removed(spark):
+    """Every broadcast-CSR kernel and blocked loop removes the
+    ``tcs_blocked_*`` dir its arrays were shipped from once its jobs have
+    read them (on a local master; a cluster keeps them for the session)."""
+    import glob
+    import os
+    import tempfile
+
+    from triangle_counting_spark.operators.components import connected_components_blocked
+    from triangle_counting_spark.operators.labelprop import label_propagation_blocked
+    from triangle_counting_spark.operators.pagerank import pagerank_blocked
+    from triangle_counting_spark.operators.triangles import (
+        four_clique_count,
+        four_cycle_count,
+        triangle_count,
+        triangle_count_delta,
+    )
+
+    def dirs():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "tcs_blocked_*")))
+
+    e = _random_edges(spark)
+    before = dirs()
+    assert triangle_count(e, "bcast").collect()[0]["triangles"] > 0
+    assert triangle_count(e, "level").collect()[0]["triangles"] > 0
+    pagerank_blocked(e, max_iter=3).state.collect()
+    connected_components_blocked(e).state.collect()
+    label_propagation_blocked(e, max_iter=2).state.collect()
+    label_propagation_blocked(e, max_iter=0).state.collect()
+    four_cycle_count(e).collect()
+    four_clique_count(e).collect()
+    triangle_count_delta(e, make_edges(spark, [(5, 7), (7, 9)])).collect()
+    assert dirs() - before == set()

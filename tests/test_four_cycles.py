@@ -162,3 +162,24 @@ def test_four_cliques_hub_cap(spark):
     loose = four_clique_count(df, max_hub_degree=100).collect()[0]
     assert loose["capped_hubs"] == 0
     assert loose["four_cliques"] == exact["four_cliques"]
+
+
+@pytest.mark.parametrize("name,want", [("K4", 1), ("K5", 5), ("bowtie", 0)])
+def test_four_cliques_row_plan_beyond_cutoff(spark, monkeypatch, name, want):
+    """With the broadcast cutoff at 0 edges the K4 count takes the row
+    plan, which runs eagerly and still returns the FIXTURES.md graph's
+    C(n, 4) count (bowtie: two triangles sharing one vertex, no K4)."""
+    from tests.conftest import TINY
+    from triangle_counting_spark.operators import triangles
+
+    def no_bcast(_ce):
+        raise AssertionError("the broadcast kernel ran beyond the cutoff")
+
+    monkeypatch.setattr(triangles, "_four_clique_bcast", no_bcast)
+    key = "spark.tcs.bcastMaxEdges"
+    spark.conf.set(key, "0")
+    try:
+        out = four_clique_count(spark.createDataFrame(TINY[name][0], "src long, dst long"))
+    finally:
+        spark.conf.unset(key)
+    assert out.collect()[0]["four_cliques"] == want

@@ -175,7 +175,7 @@ def embedding_neardup_pairs(
     import numpy as np
     import pandas as pd
 
-    from ..plans.blocked import _ship_arrays, fan_out
+    from ..plans.blocked import _ship_arrays, _ship_dir, fan_out
 
     spark = df.sparkSession
     pdf = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("emb")).toPandas()
@@ -183,7 +183,9 @@ def embedding_neardup_pairs(
     if len(ids) == 0:
         return spark.createDataFrame([], "id_a long, id_b long, cos_sim double")
     M = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["emb"]])
-    files = _ship_arrays(spark, {"ids": ids, "mat": M})
+    # the frame returned below is lazy, so its files must outlive this
+    # call: their dir stays for the session
+    files = _ship_arrays(spark, {"ids": ids, "mat": M}, _ship_dir())
     n = len(ids)
     n_slices = fan_out(spark)
     thr = float(threshold)

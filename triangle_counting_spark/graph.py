@@ -27,6 +27,7 @@ class Graph:
     def __init__(self, edges: DataFrame, assume_canonical: bool = False):
         self.edges = edges if assume_canonical else canonical_edges(edges)
         self._persisted = False
+        self._m: int | None = None  # edge count, memoized by the planners
 
     # ------------------------------------------------------------ sources
 
@@ -96,6 +97,8 @@ class Graph:
     def triangle_count(self, strategy: str = "auto") -> int:
         from .operators.triangles import triangle_count
 
+        if strategy == "auto":
+            strategy = self.plan().strategy
         return int(
             triangle_count(self.edges, strategy, assume_canonical=True)
             .collect()[0]["triangles"]
@@ -222,7 +225,9 @@ class Graph:
             return tier
         from .plans.planner import choose_iterative_tier
 
-        return choose_iterative_tier(self.edges, assume_canonical=True)
+        if self._m is None:
+            self._m = self.edges.count()
+        return choose_iterative_tier(self.edges, assume_canonical=True, m=self._m)
 
     def pagerank(self, tier: str = "auto", **kw):
         """tier: "auto" picks the CSR-blocked broadcast substrate while the
@@ -251,14 +256,14 @@ class Graph:
             # implements it
             from .operators.pagerank import pagerank
 
-            return pagerank(self.edges, **kw)
+            return pagerank(self.edges, assume_canonical=True, **kw)
         if self._tier(tier) == "blocked":
             from .operators.pagerank import pagerank_blocked
 
             return pagerank_blocked(self.edges, assume_canonical=True, **kw)
         from .operators.pagerank import pagerank
 
-        return pagerank(self.edges, **kw)
+        return pagerank(self.edges, assume_canonical=True, **kw)
 
     def connected_components(self, tier: str = "auto", **kw):
         if self._tier(tier) == "blocked":
@@ -269,7 +274,9 @@ class Graph:
             )
         from .operators.components import connected_components
 
-        return connected_components(self.edges, tier="shuffle", **kw)
+        return connected_components(
+            self.edges, tier="shuffle", assume_canonical=True, **kw
+        )
 
     def label_propagation(self, iterations: int = 3, tier: str = "auto") -> DataFrame:
         """(v, label) after ``iterations`` synchronous rounds."""
@@ -281,7 +288,9 @@ class Graph:
             ).state
         from .operators.labelprop import label_propagation_fixed
 
-        return label_propagation_fixed(self.edges, iterations, tier="shuffle")
+        return label_propagation_fixed(
+            self.edges, iterations, tier="shuffle", assume_canonical=True
+        )
 
     def maximal_independent_set(self, tier: str = "auto") -> DataFrame:
         from .operators.mis import maximal_independent_set
@@ -375,7 +384,13 @@ class Graph:
         return effective_diameter(nf, q=q)
 
     def plan(self):
-        """The statistic-driven strategy choice (tc_bader_hybrid analog)."""
+        """The statistic-driven strategy choice (tc_bader_hybrid analog).
+        The edge count it takes is kept: every later auto call of this
+        Graph (triangles or the iterative tier) reuses it."""
         from .plans.planner import choose_triangle_strategy
 
-        return choose_triangle_strategy(self.edges, assume_canonical=True)
+        choice = choose_triangle_strategy(
+            self.edges, assume_canonical=True, m=self._m
+        )
+        self._m = choice.m
+        return choice

@@ -33,9 +33,21 @@ def connected_components(
     resume: bool = True,
     use_delta: bool = True,
     tier: str = "auto",
+    assume_canonical: bool = False,
 ) -> LoopResult:
     """LoopResult whose state is ``(v: long, component: long)``;
     component = min vertex id reachable. Exact (north rule).
+
+    ``assume_canonical``: ``edges`` is already canonical (src < dst,
+    distinct), as the ``Graph`` facade's table is, so no tier
+    canonicalizes it again. Otherwise the shuffle tier canonicalizes it
+    once and persists the result for the call.
+
+    The shuffle tier builds its inputs once per call: the symmetrized
+    edge table, repartitioned on ``src`` and persisted, and the vertex
+    table — the distinct ``src`` of that table (no shuffle), persisted,
+    whose one count is the vertex count ``n`` the frontier gate uses.
+    Every cache is released before the call returns.
 
     ``tier``: "shuffle" (the hash-min + pointer-jumping dataflow below),
     "blocked" (:func:`connected_components_blocked`), or "auto" (round 6):
@@ -72,7 +84,7 @@ def connected_components(
     ):
         from ..plans.planner import choose_iterative_tier
 
-        tier = choose_iterative_tier(edges)
+        tier = choose_iterative_tier(edges, assume_canonical=assume_canonical)
     if tier == "blocked":
         return connected_components_blocked(
             edges,
@@ -80,9 +92,16 @@ def connected_components(
             checkpoint_dir=checkpoint_dir,
             checkpoint_every=checkpoint_every,
             resume=resume,
+            assume_canonical=assume_canonical,
         )
 
-    ce = canonical_edges(edges)
+    cached: list[DataFrame] = []
+    if assume_canonical:
+        ce = edges.select(SRC, DST)
+    else:
+        # both sides of the symmetrization read it — dedup once
+        ce = canonical_edges(edges).persist(StorageLevel.MEMORY_AND_DISK)
+        cached.append(ce)
     # joined every iteration — persist once, pre-partitioned on SRC so only
     # the (much smaller) frontier side shuffles per round (pagerank.py note)
     spark = edges.sparkSession
@@ -90,18 +109,21 @@ def connected_components(
     sym = (
         symmetrize(ce).repartition(_nshuf, SRC).persist(StorageLevel.MEMORY_AND_DISK)
     )
-    state0 = (
-        ce.select(F.col(SRC).alias("v"))
-        .union(ce.select(F.col(DST).alias("v")))
-        .distinct()
-        .select("v", F.col("v").alias("component"), F.lit(True).alias("changed"))
+    # every vertex is some symmetrized edge's src, and sym is already
+    # hash-partitioned on src: this distinct shuffles nothing
+    verts = sym.select(F.col(SRC).alias("v")).distinct().persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    cached += [sym, verts]
+    state0 = verts.select(
+        "v", F.col("v").alias("component"), F.lit(True).alias("changed")
     )
 
     # driver-side gate state: last round's changed count (set by delta_fn,
     # which the loop calls every iteration anyway — no extra job) and the
     # vertex count. Resume resets it → first resumed round joins full
     # state, which is always correct; only the physical plan differs.
-    _gate = {"n": None, "last_changed": None}
+    _gate = {"n": float(verts.count()), "last_changed": None}
 
     def step(state: DataFrame, _i: int) -> DataFrame:
         # delta iteration: a vertex's label can only improve via a neighbor
@@ -110,7 +132,6 @@ def connected_components(
         # of hash-min change ~everything and the filter is pure overhead
         small_frontier = (
             _gate["last_changed"] is not None
-            and _gate["n"] is not None
             and _gate["last_changed"] < _gate["n"] / 8
         )
         frontier = state.where(F.col("changed")) if (use_delta and small_frontier) else state
@@ -156,8 +177,6 @@ def connected_components(
     def delta_fn(_old: DataFrame, new: DataFrame, _i: int) -> float:
         changed = float(new.where(F.col("changed")).count())
         _gate["last_changed"] = changed
-        if _gate["n"] is None:
-            _gate["n"] = float(new.count())
         return changed
 
     result = loop(
@@ -172,7 +191,8 @@ def connected_components(
         fingerprint=f"cc|hash-min|delta={use_delta}",
         resume=resume,
     )
-    sym.unpersist()
+    for df in cached:
+        df.unpersist()
     result.state = result.state.select("v", "component")
     return result
 

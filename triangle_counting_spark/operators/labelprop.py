@@ -32,18 +32,35 @@ def label_propagation(
     run_id: str | None = None,
     resume: bool = True,
     weight_col: str | None = None,
+    assume_canonical: bool = False,
 ) -> LoopResult:
     """LoopResult whose state is ``(v: long, label: long)``.
 
     ``weight_col``: optional edge weight — neighbor votes are weighted
     sums instead of counts (ties still break by min label, so runs stay
     deterministic; integer-valued weights keep the tie set exact across
-    engines)."""
+    engines).
+
+    ``assume_canonical``: the unweighted ``edges`` are already canonical
+    (src < dst, distinct), as the ``Graph`` facade's table is, and are
+    read as is; otherwise the call canonicalizes them once and persists
+    the result for the call. Weighted runs never deduplicate, so the flag
+    does not apply to them.
+
+    Each call builds the symmetrized edge table once (repartitioned on
+    ``src``, persisted, released before the call returns); the initial
+    state is its distinct ``src``, which needs no shuffle."""
     from pyspark.storagelevel import StorageLevel
 
     _nshuf = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    cached: list[DataFrame] = []
     if weight_col is None:
-        ce = canonical_edges(edges)
+        if assume_canonical:
+            ce = edges.select(SRC, DST)
+        else:
+            # both sides of the symmetrization read it — dedup once
+            ce = canonical_edges(edges).persist(StorageLevel.MEMORY_AND_DISK)
+            cached.append(ce)
         sym_w = symmetrize(ce).select(SRC, DST, F.lit(1.0).alias("_w"))
     else:
         s, d = F.col(SRC).cast("long"), F.col(DST).cast("long")
@@ -61,9 +78,11 @@ def label_propagation(
     # joined every iteration — persist once, pre-partitioned on SRC so the
     # per-iteration vote join only shuffles the label table (pagerank.py note)
     sym = sym_w.repartition(_nshuf, SRC).persist(StorageLevel.MEMORY_AND_DISK)
+    cached.append(sym)
+    # every vertex is some symmetrized edge's src, and sym is already
+    # hash-partitioned on src: this distinct shuffles nothing
     state0 = (
-        ce.select(F.col(SRC).alias("v"))
-        .union(ce.select(F.col(DST).alias("v")))
+        sym.select(F.col(SRC).alias("v"))
         .distinct()
         .select("v", F.col("v").alias("label"), F.col("v").alias("label_prev"))
     )
@@ -109,7 +128,8 @@ def label_propagation(
         fingerprint=f"lp|sync-minlabel|weighted={weight_col is not None}",
         resume=resume,
     )
-    sym.unpersist()
+    for df in cached:
+        df.unpersist()
     result.state = result.state.select("v", "label")
     return result
 
@@ -131,7 +151,7 @@ def label_propagation_blocked(
     import numpy as np
     import pandas as pd
 
-    from ..plans.blocked import _ship_arrays, build_blocked, fan_out
+    from ..plans.blocked import build_blocked, fan_out, shipped_arrays
     from .orientation import canonical_edges as _canon
 
     spark = edges.sparkSession
@@ -144,9 +164,6 @@ def label_propagation_blocked(
     if n == 0:
         empty = spark.createDataFrame([], "v long, label long")
         return LoopResult(state=empty, iterations=0, converged=True, delta=0.0)
-    files = _ship_arrays(
-        spark, {"src": g.src, "dst": g.dst, "bounds": g.block_bounds}
-    )
 
     def make_round(bc_state, _k):
         def fn(batches):
@@ -194,20 +211,25 @@ def label_propagation_blocked(
     metrics: list[dict] = []
     converged = False
     i = 0
-    for i in range(1, max_iter + 1):
-        bc_state = spark.sparkContext.broadcast(state)
-        out = slices.mapInPandas(
-            make_round(bc_state, n_blocks), schema="dst long, val double"
-        ).toPandas()
-        bc_state.destroy()
-        new = state.copy()
-        new[out["dst"].to_numpy(dtype=np.int64)] = out["val"].to_numpy(dtype=np.int64)
-        delta = int((new != state).sum())
-        state = new
-        metrics.append({"iteration": i, "delta": float(delta)})
-        if delta == 0:
-            converged = True
-            break
+    arrays = {"src": g.src, "dst": g.dst, "bounds": g.block_bounds}
+    # no round runs no job to fetch the files: then ship none
+    with shipped_arrays(spark, arrays if max_iter >= 1 else {}) as files:
+        for i in range(1, max_iter + 1):
+            bc_state = spark.sparkContext.broadcast(state)
+            out = slices.mapInPandas(
+                make_round(bc_state, n_blocks), schema="dst long, val double"
+            ).toPandas()
+            bc_state.destroy()
+            new = state.copy()
+            new[out["dst"].to_numpy(dtype=np.int64)] = out["val"].to_numpy(
+                dtype=np.int64
+            )
+            delta = int((new != state).sum())
+            state = new
+            metrics.append({"iteration": i, "delta": float(delta)})
+            if delta == 0:
+                converged = True
+                break
     out_df = spark.createDataFrame(
         pd.DataFrame({"v": g.verts, "label": g.verts[state]})
     )
@@ -222,7 +244,7 @@ def label_propagation_blocked(
 
 def label_propagation_fixed(
     edges: DataFrame, iterations: int, weight_col: str | None = None,
-    tier: str = "auto",
+    tier: str = "auto", assume_canonical: bool = False,
 ) -> DataFrame:
     """Exactly ``iterations`` synchronous rounds (oracle-comparable).
 
@@ -235,14 +257,23 @@ def label_propagation_fixed(
     delta == 0 test, so they agree round for round (driver-gated against
     one oracle; re-verified exactly at sf0.1 this round). "shuffle"
     forces the dataflow loop; weighted votes always take it (the blocked
-    tier is unweighted)."""
+    tier is unweighted).
+
+    ``assume_canonical``: ``edges`` are already canonical, so neither the
+    planner nor either tier canonicalizes them again (see
+    :func:`label_propagation`)."""
     if tier == "auto" and weight_col is None:
         from ..plans.planner import choose_iterative_tier
 
-        tier = choose_iterative_tier(edges)
+        tier = choose_iterative_tier(edges, assume_canonical=assume_canonical)
     if tier == "blocked" and weight_col is None:
-        return label_propagation_blocked(edges, max_iter=iterations).state
-    res = label_propagation(edges, max_iter=iterations, weight_col=weight_col)
+        return label_propagation_blocked(
+            edges, max_iter=iterations, assume_canonical=assume_canonical
+        ).state
+    res = label_propagation(
+        edges, max_iter=iterations, weight_col=weight_col,
+        assume_canonical=assume_canonical,
+    )
     # loop stops early only on convergence, which is also deterministic
     return res.state
 

@@ -47,9 +47,25 @@ def pagerank(
     directed: bool = False,
     weight_col: str | None = None,
     personalized_for: list[int] | DataFrame | None = None,
+    assume_canonical: bool = False,
 ) -> LoopResult:
     """Returns LoopResult whose state is ``(v: long, rank: double)``,
     Σ rank = 1. Convergence: max |Δrank| <= tol (north-rule allclose 1e-6).
+
+    Each call builds its inputs once: the cleaned edge table, the
+    symmetrized edge table (repartitioned on ``src`` and persisted) and
+    the vertex ledger ``(v, outdeg)`` (persisted; ``n`` and the dangling
+    test read it in one job, the initial state reads it again). Without
+    an explicit ``vertices`` table an undirected run takes its vertices
+    from the symmetrized table's ``src``, which needs no shuffle. Every
+    cache is released before the call returns.
+
+    ``assume_canonical``: the unweighted edge table is already clean —
+    canonical (src < dst, distinct) for undirected runs, distinct without
+    self-loops for ``directed`` runs — as the ``Graph`` facade's table
+    is. It is then read as is; otherwise the call cleans it once and
+    persists the result for the call. Weighted runs never deduplicate,
+    so the flag does not apply to them.
 
     ``directed=False`` treats the canonical edge table as undirected
     (each edge contributes both directions), matching the reference's
@@ -71,10 +87,18 @@ def pagerank(
     from pyspark.storagelevel import StorageLevel
 
     w = weight_col
+    cached: list[DataFrame] = []
     if w is None:
-        # directed graphs keep their original (src, dst) orientation —
-        # canonical_edges would silently re-orient every edge src < dst
-        ce = directed_edges(edges) if directed else canonical_edges(edges)
+        if assume_canonical:
+            ce = edges.select(SRC, DST)
+        else:
+            # directed graphs keep their original (src, dst) orientation —
+            # canonical_edges would silently re-orient every edge src < dst
+            ce = directed_edges(edges) if directed else canonical_edges(edges)
+            # read by both sides of the symmetrization (and the vertex
+            # union of a directed run) — dedup once, not once per reader
+            ce = ce.persist(StorageLevel.MEMORY_AND_DISK)
+            cached.append(ce)
         base_edges = symmetrize(ce) if not directed else ce.select(SRC, DST)
         base_edges = base_edges.select(SRC, DST, F.lit(1.0).alias("_w"))
     else:
@@ -106,22 +130,40 @@ def pagerank(
     out_edges = base_edges.repartition(_nshuf, SRC).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    verts = _vertices(ce, vertices)
-    n = verts.count()
-    if n == 0:
-        empty = verts.select("v", F.lit(0.0).alias("rank"))
-        return LoopResult(state=empty, iterations=0, converged=True, delta=0.0)
-
+    cached.append(out_edges)
+    # out_edges is hash-partitioned on src, so grouping on src shuffles
+    # nothing
     outdeg = out_edges.groupBy(F.col(SRC).alias("v")).agg(
         F.sum("_w").alias("outdeg")
     )
+    if vertices is None and not directed:
+        # every vertex of a symmetrized edge table is some edge's src
+        ledger = outdeg
+    else:
+        ledger = _vertices(ce, vertices).join(outdeg, "v", "left").select(
+            "v", F.coalesce("outdeg", F.lit(0.0)).alias("outdeg")
+        )
+    ledger = ledger.persist(StorageLevel.MEMORY_AND_DISK)
+    cached.append(ledger)
+    r = ledger.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(F.col("outdeg") == 0.0, 1)).alias("dangling"),
+    ).collect()[0]
+    n = int(r["n"])
+    if n == 0:
+        for df in cached:
+            df.unpersist()
+        empty = spark.createDataFrame([], "v long, rank double")
+        return LoopResult(state=empty, iterations=0, converged=True, delta=0.0)
+    # undirected edge-derived graphs have no dangling vertices; skip the
+    # per-iteration dangling-mass job entirely unless some exist
+    has_dangling = r["dangling"] > 0
+
     # vertex ledger: rank + outdeg (0 for dangling) + teleport probability
     # carried together so each iteration is exactly one join + one agg +
     # one join. tele(v) = 1/n globally, or 1/|S| on the personalization
     # set (0 elsewhere) — teleport AND dangling mass both land on tele.
-    base = verts.join(outdeg, "v", "left").select(
-        "v", F.coalesce("outdeg", F.lit(0.0)).alias("outdeg")
-    )
+    base = ledger
     if personalized_for is None:
         base = base.select("v", "outdeg", F.lit(1.0 / n).alias("tele"))
     elif isinstance(personalized_for, DataFrame):
@@ -155,9 +197,6 @@ def pagerank(
         )
         base = base.select("v", "outdeg", tele.alias("tele"))
     state0 = base.select("v", "outdeg", "tele", F.col("tele").alias("rank"))
-    # undirected edge-derived graphs have no dangling vertices; skip the
-    # per-iteration dangling-mass job entirely unless some exist
-    has_dangling = base.where(F.col("outdeg") == 0.0).limit(1).count() > 0
 
     def step(state: DataFrame, _i: int) -> DataFrame:
         dangling = 0.0
@@ -218,7 +257,8 @@ def pagerank(
         ),
         resume=resume,
     )
-    out_edges.unpersist()
+    for df in cached:
+        df.unpersist()
     result.state = result.state.select("v", "rank")
     return result
 

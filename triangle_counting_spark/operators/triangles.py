@@ -595,9 +595,13 @@ class BroadcastCSRTriangles:
         # ship CSR as mmap'd .npy files, not a pickled broadcast: one
         # page-cache copy per machine instead of one unpickled copy per
         # python worker (see plans/blocked.py measurement at RMAT-20)
-        from ..plans.blocked import _ship_arrays
+        from ..plans.blocked import _ship_arrays, _ship_dir
 
-        self._files = _ship_arrays(self.spark, {"rowptr": rowptr, "colind": od_})
+        self._dir = _ship_dir()
+        self._files = _ship_arrays(
+            self.spark, {"rowptr": rowptr, "colind": od_}, self._dir
+        )
+        self._counted = False
 
     def count(self) -> int:
         """Run the probe kernel over the prebuilt broadcast CSR."""
@@ -646,12 +650,19 @@ class BroadcastCSRTriangles:
                         mask[nbrs] = False
             yield pd.DataFrame({"partial": [total]})
 
-        return _sum_slices(self.spark, kernel, _k)
+        total = _sum_slices(self.spark, kernel, _k)
+        self._counted = True
+        return total
 
     def unpersist(self) -> None:
-        # nothing is cached in Spark; the shipped .npy files stay in the
-        # tcs_blocked_* dir _ship_arrays made — no one removes that dir yet
-        pass
+        """Remove the shipped CSR files once a count has read them
+        (:func:`~..plans.blocked._drop_shipped`); nothing is cached in
+        Spark. Without a count the files stay: an unread added file would
+        fail the next task that lists it."""
+        if self._counted:
+            from ..plans.blocked import _drop_shipped
+
+            _drop_shipped(self.spark, self._dir)
 
 
 def _level_c1_bcast(horiz: DataFrame, cross: DataFrame) -> int:
@@ -684,11 +695,9 @@ def _level_c1_bcast(horiz: DataFrame, cross: DataFrame) -> int:
     rowptr[1:] = np.cumsum(np.bincount(es, minlength=n))
 
     spark = horiz.sparkSession
-    from ..plans.blocked import _ship_arrays, fan_out
+    from ..plans.blocked import fan_out, shipped_arrays
 
-    files = _ship_arrays(
-        spark, {"rowptr": rowptr, "colind": colind, "hu": hui, "hv": hvi}
-    )
+    arrays = {"rowptr": rowptr, "colind": colind, "hu": hui, "hv": hvi}
     _k = fan_out(spark)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -742,7 +751,8 @@ def _level_c1_bcast(horiz: DataFrame, cross: DataFrame) -> int:
                     total += int(np.count_nonzero(key_b[pos] == key_a))
         yield pd.DataFrame({"partial": [total]})
 
-    return _sum_slices(spark, kernel, _k)
+    with shipped_arrays(spark, arrays) as files:
+        return _sum_slices(spark, kernel, _k)
 
 
 def _count_level(edges: DataFrame) -> DataFrame:
@@ -1060,12 +1070,11 @@ def _delta_bcast_arrays(spark, s_raw, d_raw, t_raw) -> int:
     du = s[is_d].astype(np.int64)
     dv = d[is_d].astype(np.int64)
 
-    from ..plans.blocked import _ship_arrays, fan_out
+    from ..plans.blocked import fan_out, shipped_arrays
 
-    files = _ship_arrays(
-        spark,
-        {"rowptr": rowptr, "colind": colind, "tags": tags, "du": du, "dv": dv},
-    )
+    arrays = {
+        "rowptr": rowptr, "colind": colind, "tags": tags, "du": du, "dv": dv
+    }
     _k = fan_out(spark)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1129,7 +1138,8 @@ def _delta_bcast_arrays(spark, s_raw, d_raw, t_raw) -> int:
                     )
         yield pd.DataFrame({"partial": [total]})
 
-    return _sum_slices(spark, kernel, _k) // 6
+    with shipped_arrays(spark, arrays) as files:
+        return _sum_slices(spark, kernel, _k) // 6
 
 
 def triangle_count_delta(
@@ -1337,7 +1347,9 @@ def triangle_count(
         fn = _count_join
     elif strategy == "bcast":
         # orientation happens in-kernel (numpy); feed canonical edges
-        count = BroadcastCSRTriangles(ce, assume_canonical=True).count()
+        counter = BroadcastCSRTriangles(ce, assume_canonical=True)
+        count = counter.count()
+        counter.unpersist()
         return _one_row(edges.sparkSession, (count,), "triangles long")
     elif strategy == "level":
         return _count_level(ce)
@@ -1440,9 +1452,9 @@ def _four_cycle_bcast(ce: DataFrame) -> int:
     rowptr = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(deg, out=rowptr[1:])
 
-    from ..plans.blocked import _ship_arrays, fan_out
+    from ..plans.blocked import fan_out, shipped_arrays
 
-    files = _ship_arrays(spark, {"rowptr": rowptr, "colind": colind})
+    arrays = {"rowptr": rowptr, "colind": colind}
     _k = fan_out(spark)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1509,7 +1521,8 @@ def _four_cycle_bcast(ce: DataFrame) -> int:
                     total += int((runs * (runs - 1)).sum())
         yield pd.DataFrame({"partial": [total]})
 
-    return _sum_slices(spark, kernel, _k) // 4
+    with shipped_arrays(spark, arrays) as files:
+        return _sum_slices(spark, kernel, _k) // 4
 
 
 def four_cycle_count(
@@ -1649,12 +1662,13 @@ def _four_clique_bcast(ce: DataFrame) -> int:
     rowptr = np.zeros(n + 1, dtype=np.int64)
     rowptr[1:] = np.cumsum(np.bincount(os_, minlength=n))
 
-    from ..plans.blocked import _ship_arrays, fan_out
+    from ..plans.blocked import fan_out, shipped_arrays
 
-    files = _ship_arrays(
-        spark, {"rowptr": rowptr, "colind": od_.astype(np.int32),
-                "esrc": os_.astype(np.int32)}
-    )
+    arrays = {
+        "rowptr": rowptr,
+        "colind": od_.astype(np.int32),
+        "esrc": os_.astype(np.int32),
+    }
     _k = fan_out(spark)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1743,7 +1757,8 @@ def _four_clique_bcast(ce: DataFrame) -> int:
                         total += int(np.count_nonzero(s_key[pos2] == probe))
         yield pd.DataFrame({"partial": [total]})
 
-    return _sum_slices(spark, kernel, _k)
+    with shipped_arrays(spark, arrays) as files:
+        return _sum_slices(spark, kernel, _k)
 
 
 def four_clique_count(
@@ -1766,7 +1781,9 @@ def four_clique_count(
     the degree-oriented triangle stream (O(m·√m), tc.c:944-975),
     value-sorted with overflow-free integer arithmetic, self-joined on
     the sorted (x, y) prefix and closed with one edge semi-join — all
-    JVM, integer end to end, AQE-splittable.
+    JVM, integer end to end, AQE-splittable. Both tiers execute eagerly,
+    with the canonical edge table persisted for the call, and return a
+    1-row ``(four_cliques)`` frame.
 
     ``max_hub_degree``: same explicit hub cap as :func:`four_cycle_count`
     (induced subgraph on degree <= cap, plus a ``capped_hubs`` report
@@ -1785,10 +1802,18 @@ def four_clique_count(
         m = ce.count()
         if m <= bcast_max_edges(ce.sparkSession):
             total = _four_clique_bcast(ce)
-            out = _one_row(ce.sparkSession, (total,), "four_cliques long")
-            return out if capped is None else out.crossJoin(capped)
+        else:
+            total = _four_clique_rows(ce)
     finally:
         ce.unpersist()
+    out = _one_row(ce.sparkSession, (total,), "four_cliques long")
+    return out if capped is None else out.crossJoin(capped)
+
+
+def _four_clique_rows(ce: DataFrame) -> int:
+    """The beyond-memory K4 row plan of :func:`four_clique_count`, run
+    eagerly while the caller holds ``ce`` persisted: the orientation and
+    the closing edge semi-join both read it."""
     tri = _oriented_triangles(orient_by_degree(ce))
     # overflow-free median (a+b+c − min − max wraps near 2^62 ids) and an
     # EAGER materialization: the triangle stream is the dominant cost
@@ -1808,11 +1833,7 @@ def four_clique_count(
         & (F.col("t1.y") == F.col("t2.y"))
         & (F.col("t1.z") < F.col("t2.z")),
     ).select(F.col("t1.z").alias(SRC), F.col("t2.z").alias(DST))
-    out = (
-        pairs.join(ce, [SRC, DST], "left_semi")
-        .agg(F.count(F.lit(1)).cast("long").alias("four_cliques"))
-    )
-    return out if capped is None else out.crossJoin(capped)
+    return pairs.join(ce, [SRC, DST], "left_semi").count()
 
 
 def clustering_coefficient(edges: DataFrame) -> DataFrame:

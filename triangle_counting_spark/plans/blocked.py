@@ -29,6 +29,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import tempfile
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 import numpy as np
@@ -138,21 +141,6 @@ def blocked_rounds(
     """
     import time
 
-    # Ship the (large, immutable) graph arrays as .npy FILES + mmap, not as
-    # a pickled broadcast: a pickled 540 MB graph is unpickled into every
-    # python worker process (32 workers -> 17 GB RAM and a 100+ s first
-    # iteration, measured at RMAT-20). np.load(mmap_mode='r') keeps ONE
-    # page-cache copy per machine and loads in microseconds; sc.addFile
-    # distributes the files to executors on a real cluster.
-    graph_files = _ship_arrays(
-        spark,
-        {
-            "src": g.src,
-            "dst": g.dst,
-            "bounds": g.block_bounds,
-            **({"weight": g.weight} if g.weight is not None else {}),
-        },
-    )
     n_blocks = g.n_blocks
     state = state0.copy()
     start_iter = 0
@@ -165,6 +153,8 @@ def blocked_rounds(
             metrics.append({"iteration": start_iter, "resumed": True, **meta})
             if meta.get("delta", float("inf")) <= tol:
                 return state, start_iter, True, metrics
+    if start_iter >= max_iter:
+        return state, start_iter, False, metrics
 
     mode_min = gather == "min"
 
@@ -210,60 +200,94 @@ def blocked_rounds(
     slices = spark.range(0, n_blocks, 1, numPartitions=n_blocks)
     converged = False
     delta = float("inf")
-    i = start_iter
-    for i in range(start_iter + 1, max_iter + 1):
-        t0 = time.time()
-        bc_state = spark.sparkContext.broadcast(state)
-        rows = slices.mapInPandas(make_round(bc_state), schema="dst long, val double")
-        pdf = rows.toPandas()
-        bc_state.destroy()
-        gathered = np.full(
-            len(g.verts), np.inf if mode_min else 0.0, dtype=np.float64
-        )
-        gathered[pdf["dst"].to_numpy(dtype=np.int64)] = pdf["val"].to_numpy()
-        state, delta = update(state, gathered)
-        m = {"iteration": i, "delta": float(delta), "sec": time.time() - t0}
-        if checkpoint_dir and (i % checkpoint_every == 0 or delta <= tol):
-            _write(checkpoint_dir, fingerprint, i, state, float(delta))
-            m["checkpoint"] = True
-        metrics.append(m)
-        if delta <= tol:
-            converged = True
-            break
+    # Ship the (large, immutable) graph arrays as .npy FILES + mmap, not as
+    # a pickled broadcast: a pickled 540 MB graph is unpickled into every
+    # python worker process (32 workers -> 17 GB RAM and a 100+ s first
+    # iteration, measured at RMAT-20). np.load(mmap_mode='r') keeps ONE
+    # page-cache copy per machine and loads in microseconds; sc.addFile
+    # distributes the files to executors on a real cluster.
+    with shipped_arrays(
+        spark,
+        {
+            "src": g.src,
+            "dst": g.dst,
+            "bounds": g.block_bounds,
+            **({"weight": g.weight} if g.weight is not None else {}),
+        },
+    ) as graph_files:
+        for i in range(start_iter + 1, max_iter + 1):
+            t0 = time.time()
+            bc_state = spark.sparkContext.broadcast(state)
+            rows = slices.mapInPandas(
+                make_round(bc_state), schema="dst long, val double"
+            )
+            pdf = rows.toPandas()
+            bc_state.destroy()
+            gathered = np.full(
+                len(g.verts), np.inf if mode_min else 0.0, dtype=np.float64
+            )
+            gathered[pdf["dst"].to_numpy(dtype=np.int64)] = pdf["val"].to_numpy()
+            state, delta = update(state, gathered)
+            m = {"iteration": i, "delta": float(delta), "sec": time.time() - t0}
+            if checkpoint_dir and (i % checkpoint_every == 0 or delta <= tol):
+                _write(checkpoint_dir, fingerprint, i, state, float(delta))
+                m["checkpoint"] = True
+            metrics.append(m)
+            if delta <= tol:
+                converged = True
+                break
     return state, i, converged, metrics
 
 
-def _ship_arrays(spark: SparkSession, arrays: dict[str, np.ndarray]) -> dict[str, str]:
-    """Write numpy arrays as .npy files and register them with sc.addFile.
+def _ship_arrays(
+    spark: SparkSession, arrays: dict[str, np.ndarray], into: str
+) -> dict[str, str]:
+    """Write numpy arrays as .npy files into the directory ``into`` and
+    register them with sc.addFile.
 
-    Local mode reads them in place; cluster mode distributes once per
-    executor. Returns name → file basename for :func:`_load_arrays`.
+    Each executor copies them into its SparkFiles directory once, before
+    its first task. Returns name → file basename (``SparkFiles.get`` key).
     """
-    import tempfile
     import uuid as _uuid
 
     tag = _uuid.uuid4().hex[:10]
-    d = tempfile.mkdtemp(prefix="tcs_blocked_")
     out = {}
     for name, arr in arrays.items():
         fname = f"tcs_{tag}_{name}.npy"
-        path = os.path.join(d, fname)
+        path = os.path.join(into, fname)
         np.save(path, arr)
         spark.sparkContext.addFile(path)
         out[name] = fname
     return out
 
 
-def _load_arrays(files: dict[str, str]) -> dict[str, np.ndarray]:
-    """mmap the shipped arrays inside a worker (one page-cache copy/node)."""
-    from pyspark import SparkFiles
+def _ship_dir() -> str:
+    return tempfile.mkdtemp(prefix="tcs_blocked_")
 
-    # np.asarray strips the np.memmap subclass (a zero-copy view over the
-    # same pages) — fancy indexing through the subclass measurably drags
-    return {
-        name: np.asarray(np.load(SparkFiles.get(fname), mmap_mode="r"))
-        for name, fname in files.items()
-    }
+
+def _drop_shipped(spark: SparkSession, d: str) -> None:
+    """Remove a shipped-array directory once a job has read its files.
+
+    Spark has no call to withdraw a file from ``sc.addFile``: every task
+    of the session lists it, and an executor that has not fetched it yet
+    copies it from this directory. On a local master the one executor
+    fetched it with the caller's first task, so the directory can go.
+    On a cluster a later executor would still ask for it, so it stays
+    for the session.
+    """
+    if spark.sparkContext._jsc.sc().isLocal():
+        shutil.rmtree(d, ignore_errors=True)
+
+
+@contextmanager
+def shipped_arrays(spark: SparkSession, arrays: dict[str, np.ndarray]):
+    """:func:`_ship_arrays` into a new ``tcs_blocked_*`` temp dir for the
+    length of a with-block, which must run at least one job over the
+    files; the dir is dropped (:func:`_drop_shipped`) when the block ends
+    without an exception (after one, no task may have fetched them)."""
+    d = _ship_dir()
+    yield _ship_arrays(spark, arrays, d)
+    _drop_shipped(spark, d)
 
 
 def _write(base: str, fingerprint: str, iteration: int, state: np.ndarray, delta: float):

@@ -105,16 +105,18 @@ def choose_iterative_tier(
     edges: DataFrame,
     blocked_max_edges: int | None = None,
     assume_canonical: bool = False,
+    m: int | None = None,
 ) -> str:
     """"blocked" (CSR-in-memory broadcast tier) while the graph fits a
     driver/executor vector, else "shuffle" — the same memory-fit statistic
     the triangle planner uses, applied to PageRank/CC/label propagation so
     callers don't have to self-select the tier. Default cutoff is the
-    memory-derived :func:`bcast_max_edges`."""
-    ce = edges if assume_canonical else canonical_edges(edges)
-    m = ce.count()
+    memory-derived :func:`bcast_max_edges`. ``m``: the canonical edge
+    count when the caller already knows it (no count job then)."""
+    if m is None:
+        m = (edges if assume_canonical else canonical_edges(edges)).count()
     if blocked_max_edges is None:
-        blocked_max_edges = bcast_max_edges(ce.sparkSession)
+        blocked_max_edges = bcast_max_edges(edges.sparkSession)
     return "blocked" if m <= blocked_max_edges else "shuffle"
 
 
@@ -124,8 +126,11 @@ def choose_triangle_strategy(
     bcast_max: int | None = None,
     k_cutover: float = K_CUTOVER,
     assume_canonical: bool = False,
+    m: int | None = None,
 ) -> PlanChoice:
     """Pick a triangle strategy from graph statistics (cheapest first).
+    ``m``: the canonical edge count when the caller already knows it (no
+    count job then).
 
     Beyond the memory cutoff, auto ALWAYS picks "part" (round 4,
     measured): the reference's k-statistic cutover (tc.c:1904) routes
@@ -141,10 +146,10 @@ def choose_triangle_strategy(
     auto one full BFS on every beyond-memory graph; ``k_cutover`` is
     retained for signature compatibility and opt-in experiments via
     :func:`choose_with_level`."""
-    ce = edges if assume_canonical else canonical_edges(edges)
-    m = ce.count()
+    if m is None:
+        m = (edges if assume_canonical else canonical_edges(edges)).count()
     if bcast_max is None:
-        bcast_max = bcast_max_edges(ce.sparkSession)
+        bcast_max = bcast_max_edges(edges.sparkSession)
     if m < small_edges:
         return PlanChoice("sql", m, None, f"m={m} < {small_edges} (tc.h:43 base)")
     if m <= bcast_max:
