@@ -164,7 +164,10 @@ def test_four_cliques_hub_cap(spark):
     assert loose["four_cliques"] == exact["four_cliques"]
 
 
-@pytest.mark.parametrize("name,want", [("K4", 1), ("K5", 5), ("bowtie", 0)])
+@pytest.mark.parametrize(
+    "name,want",
+    [("K4", 1), ("K5", 5), ("bowtie", 0), ("triangle", 0), ("star5", 0), ("two_triangles", 0)],
+)
 def test_four_cliques_row_plan_beyond_cutoff(spark, monkeypatch, name, want):
     """With the broadcast cutoff at 0 edges the K4 count takes the row
     plan, which runs eagerly and still returns the FIXTURES.md graph's

@@ -20,7 +20,7 @@ from tests.conftest import make_edges
 
 
 def test_compact_ids_one_based_has_no_phantoms():
-    from triangle_counting_spark.operators.triangles import _compact_ids
+    from triangle_counting_spark.plans.blocked import compact_ids as _compact_ids
 
     # 1-based path graph 1-2-3-4-5: id 0 never appears
     s = np.array([1, 2, 3, 4], dtype=np.int64)

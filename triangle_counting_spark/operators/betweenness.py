@@ -24,7 +24,7 @@ betweenness sends users elsewhere.
 Two tiers, same fixpoint:
 
 - blocked: per-root numpy Brandes over the shared local CSR
-  (bfs.build_local_csr) — k · O(m) with zero shuffles.
+  (bfs.local_csr) — k · O(m) with zero shuffles.
 - shuffle: simultaneous multi-root passes keyed (root, v). Forward is the
   sampled-distances frontier loop carrying sigma (all shortest-path
   predecessors of a level-L vertex sit at level L-1, so one
@@ -95,15 +95,16 @@ def _betweenness_blocked(ce: DataFrame, roots: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from .bfs import build_local_csr
+    from ..plans.blocked import csr_kernels
+    from .bfs import local_csr
 
     spark = ce.sparkSession
-    pdf = ce.select(SRC, DST).toPandas()
-    if len(pdf) == 0:
+    verts, _deg, rowptr, ci = local_csr(ce)
+    n = len(verts)
+    if n == 0:
         return spark.createDataFrame([], "v long, _delta double")
     root_ids = np.array(sorted(r["v"] for r in roots.collect()), dtype=np.int64)
-    verts, _deg, rowptr, ci = build_local_csr(pdf)
-    n = len(verts)
+    segment_offsets, _, _ = csr_kernels()
     bc = np.zeros(n, dtype=np.float64)
     for root in root_ids:
         seed = int(np.searchsorted(verts, root))
@@ -118,16 +119,9 @@ def _betweenness_blocked(ce: DataFrame, roots: DataFrame) -> DataFrame:
         lvl = 0
         while len(frontier):
             lvl += 1
-            starts = rowptr[frontier]
-            lens = rowptr[frontier + 1] - starts
-            tot = int(lens.sum())
-            if tot == 0:
+            offs, lens = segment_offsets(rowptr, frontier)
+            if len(offs) == 0:
                 break
-            offs = (
-                np.arange(tot, dtype=np.int64)
-                - np.repeat(np.cumsum(lens) - lens, lens)
-                + np.repeat(starts, lens)
-            )
             srcs = np.repeat(frontier, lens)
             nbrs = ci[offs]
             newv = np.unique(nbrs[dist[nbrs] < 0])
@@ -141,16 +135,9 @@ def _betweenness_blocked(ce: DataFrame, roots: DataFrame) -> DataFrame:
         delta = np.zeros(n, dtype=np.float64)
         for lvl in range(len(levels) - 1, 0, -1):
             wset = levels[lvl]
-            starts = rowptr[wset]
-            lens = rowptr[wset + 1] - starts
-            tot = int(lens.sum())
-            if tot == 0:
+            offs, lens = segment_offsets(rowptr, wset)
+            if len(offs) == 0:
                 continue
-            offs = (
-                np.arange(tot, dtype=np.int64)
-                - np.repeat(np.cumsum(lens) - lens, lens)
-                + np.repeat(starts, lens)
-            )
             ws = np.repeat(wset, lens)
             vs = ci[offs]
             pred = dist[vs] == lvl - 1

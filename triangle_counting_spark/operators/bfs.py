@@ -58,24 +58,15 @@ def frontier_neighbors(
     )
 
 
-def build_local_csr(pdf):
-    """Canonical-edge pandas frame -> symmetrized local CSR
-    ``(verts, deg, rowptr, ci)`` with searchsorted-compacted vertex codes —
-    the shared build for every driver-side blocked sweep (BFS here,
-    sampled distances in operators/distances.py)."""
-    import numpy as np
+def local_csr(ce: DataFrame):
+    """Collect canonical edges into a symmetric driver CSR
+    ``(verts, deg, rowptr, ci)`` — the shared build for every driver-side
+    sweep (BFS here, sampled distances and betweenness)."""
+    from ..plans.blocked import build_csr, collect_compact
 
-    s = pdf[SRC].to_numpy(np.int64)
-    d = pdf[DST].to_numpy(np.int64)
-    verts = np.unique(np.concatenate([s, d]))
-    n = len(verts)
-    heads = np.concatenate([np.searchsorted(verts, s), np.searchsorted(verts, d)])
-    tails = np.concatenate([np.searchsorted(verts, d), np.searchsorted(verts, s)])
-    deg = np.bincount(heads, minlength=n)
-    rowptr = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(deg, out=rowptr[1:])
-    ci = tails[np.argsort(heads, kind="stable")]
-    return verts, deg, rowptr, ci
+    s, d, verts = collect_compact(ce.select(SRC, DST))
+    rowptr, ci, _ = build_csr(s, d, len(verts))
+    return verts, rowptr[1:] - rowptr[:-1], rowptr, ci
 
 
 def csr_expand_unvisited(rowptr, ci, frontier, visited_mask):
@@ -84,16 +75,10 @@ def csr_expand_unvisited(rowptr, ci, frontier, visited_mask):
     shared inner step of the blocked BFS/distance sweeps."""
     import numpy as np
 
-    starts = rowptr[frontier]
-    lens = rowptr[frontier + 1] - starts
-    tot = int(lens.sum())
-    if tot == 0:
-        return np.empty(0, dtype=np.int64)
-    offs = (
-        np.arange(tot, dtype=np.int64)
-        - np.repeat(np.cumsum(lens) - lens, lens)
-        + np.repeat(starts, lens)
-    )
+    from ..plans.blocked import csr_kernels
+
+    segment_offsets, _, _ = csr_kernels()
+    offs, _ = segment_offsets(rowptr, frontier)
     nbrs = np.unique(ci[offs])
     return nbrs[~visited_mask[nbrs]]
 
@@ -123,11 +108,10 @@ def bfs_levels_blocked(
 
     spark = edges.sparkSession
     ce = edges.select(SRC, DST) if assume_canonical else canonical_edges(edges)
-    pdf = ce.toPandas()
     schema = "v long, root long, level long"
-    if len(pdf) == 0:
+    verts, deg, rowptr, ci = local_csr(ce)
+    if len(verts) == 0:
         return spark.createDataFrame([], schema)
-    verts, deg, rowptr, ci = build_local_csr(pdf)
     n = len(verts)
     level = np.full(n, -1, dtype=np.int64)
     root = np.full(n, -1, dtype=np.int64)

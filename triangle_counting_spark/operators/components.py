@@ -231,8 +231,13 @@ def connected_components_blocked(
         empty = spark.createDataFrame([], "v long, component long")
         return LoopResult(state=empty, iterations=0, converged=True, delta=0.0)
 
-    def update(state, gathered):
-        new = np.minimum(state, np.where(np.isfinite(gathered), gathered, state))
+    def gather(label, s, d, _w):
+        cut = np.flatnonzero(np.r_[True, d[1:] != d[:-1]])
+        return d[cut], np.minimum.reduceat(label[s], cut)
+
+    def update(state, dst, val):
+        new = state.copy()
+        new[dst] = np.minimum(state[dst], val)
         # driver-side pointer jumping to the local fixpoint
         idx = new.astype(np.int64)
         while True:
@@ -248,7 +253,7 @@ def connected_components_blocked(
         spark,
         g,
         np.arange(n, dtype=np.float64),
-        "min",
+        gather,
         update,
         tol=0.0,
         max_iter=max_iter,

@@ -68,16 +68,15 @@ def _sampled_distances_blocked(ce: DataFrame, roots: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from .bfs import build_local_csr, csr_expand_unvisited
+    from .bfs import csr_expand_unvisited, local_csr
 
     spark = ce.sparkSession
     schema = "root long, v long, dist long"
-    pdf = ce.select(SRC, DST).toPandas()
-    if len(pdf) == 0:
+    verts, _deg, rowptr, ci = local_csr(ce)
+    n = len(verts)
+    if n == 0:
         return spark.createDataFrame([], schema)
     root_ids = np.array(sorted(r["v"] for r in roots.collect()), dtype=np.int64)
-    verts, _deg, rowptr, ci = build_local_csr(pdf)
-    n = len(verts)
 
     frames = []
     for root in root_ids:

@@ -151,7 +151,7 @@ def label_propagation_blocked(
     import numpy as np
     import pandas as pd
 
-    from ..plans.blocked import build_blocked, fan_out, shipped_arrays
+    from ..plans.blocked import blocked_rounds, build_blocked, fan_out
     from .orientation import canonical_edges as _canon
 
     spark = edges.sparkSession
@@ -165,77 +165,37 @@ def label_propagation_blocked(
         empty = spark.createDataFrame([], "v long, label long")
         return LoopResult(state=empty, iterations=0, converged=True, delta=0.0)
 
-    def make_round(bc_state, _k):
-        def fn(batches):
-            from pyspark import SparkFiles  # noqa: PLC0415
-            import numpy as np  # noqa: PLC0415
+    def vote(lbl_of, s, d, _w):
+        lbl = lbl_of[s]
+        order = np.lexsort((lbl, d))
+        dd, lbl = d[order], lbl[order]
+        # run-length counts of (dst, label) pairs
+        new_run = np.r_[True, (dd[1:] != dd[:-1]) | (lbl[1:] != lbl[:-1])]
+        starts = np.flatnonzero(new_run)
+        cnts = np.diff(np.r_[starts, len(dd)])
+        rd, rl = dd[starts], lbl[starts]
+        # winner per dst: (count desc, label asc) → lexsort keys
+        # reversed-significance: label, -count, dst
+        w = np.lexsort((rl, -cnts, rd))
+        rd, rl = rd[w], rl[w]
+        first = np.flatnonzero(np.r_[True, rd[1:] != rd[:-1]])
+        return rd[first], rl[first].astype(np.float64)
 
-            arrs = {
-                name: np.asarray(np.load(SparkFiles.get(f), mmap_mode="r"))
-                for name, f in files.items()
-            }
-            s_, d_, bounds = arrs["src"], arrs["dst"], arrs["bounds"]
-            vec = bc_state.value
-            for b in batches:
-                for blk in b["id"].to_numpy():
-                    lo, hi = bounds[blk], bounds[blk + 1]
-                    if hi <= lo:
-                        yield pd.DataFrame({"dst": [], "val": []}).astype(
-                            {"dst": "int64", "val": "float64"}
-                        )
-                        continue
-                    dd = d_[lo:hi]
-                    lbl = vec[s_[lo:hi]]
-                    order = np.lexsort((lbl, dd))
-                    dd, lbl = dd[order], lbl[order]
-                    # run-length counts of (dst, label) pairs
-                    new_run = np.r_[
-                        True, (dd[1:] != dd[:-1]) | (lbl[1:] != lbl[:-1])
-                    ]
-                    starts = np.flatnonzero(new_run)
-                    cnts = np.diff(np.r_[starts, len(dd)])
-                    rd, rl = dd[starts], lbl[starts]
-                    # winner per dst: (count desc, label asc) → lexsort keys
-                    # reversed-significance: label, -count, dst
-                    w = np.lexsort((rl, -cnts, rd))
-                    rd, rl = rd[w], rl[w]
-                    first = np.flatnonzero(np.r_[True, rd[1:] != rd[:-1]])
-                    yield pd.DataFrame(
-                        {"dst": rd[first], "val": rl[first].astype(np.float64)}
-                    )
+    def update(state, dst, val):
+        new = state.copy()
+        new[dst] = val.astype(np.int64)
+        return new, int((new != state).sum())
 
-        return fn
-
-    slices = spark.range(0, n_blocks, 1, numPartitions=n_blocks)
-    state = np.arange(n, dtype=np.int64)
-    metrics: list[dict] = []
-    converged = False
-    i = 0
-    arrays = {"src": g.src, "dst": g.dst, "bounds": g.block_bounds}
-    # no round runs no job to fetch the files: then ship none
-    with shipped_arrays(spark, arrays if max_iter >= 1 else {}) as files:
-        for i in range(1, max_iter + 1):
-            bc_state = spark.sparkContext.broadcast(state)
-            out = slices.mapInPandas(
-                make_round(bc_state, n_blocks), schema="dst long, val double"
-            ).toPandas()
-            bc_state.destroy()
-            new = state.copy()
-            new[out["dst"].to_numpy(dtype=np.int64)] = out["val"].to_numpy(
-                dtype=np.int64
-            )
-            delta = int((new != state).sum())
-            state = new
-            metrics.append({"iteration": i, "delta": float(delta)})
-            if delta == 0:
-                converged = True
-                break
+    state, iters, converged, metrics = blocked_rounds(
+        spark, g, np.arange(n, dtype=np.int64), vote, update, tol=0.0,
+        max_iter=max_iter,
+    )
     out_df = spark.createDataFrame(
         pd.DataFrame({"v": g.verts, "label": g.verts[state]})
     )
     return LoopResult(
         state=out_df,
-        iterations=i,
+        iterations=iters,
         converged=converged,
         delta=metrics[-1]["delta"] if metrics else 0.0,
         metrics=metrics,

@@ -165,25 +165,14 @@ def _mis_blocked(ce: DataFrame, priority: str = "xxhash64") -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    pdf = ce.select(SRC, DST).toPandas()
+    from ..plans.blocked import build_csr, collect_compact
+
     spark = ce.sparkSession
-    if len(pdf) == 0:
+    s, d, verts = collect_compact(ce.select(SRC, DST))
+    if len(s) == 0:
         return spark.createDataFrame([], "v long, in_mis boolean")
-    src = pdf[SRC].to_numpy(np.int64)
-    dst = pdf[DST].to_numpy(np.int64)
-    verts = np.unique(np.concatenate([src, dst]))
     n = len(verts)
-    # verts is sorted-unique, so searchsorted IS the factorize — pure
-    # numpy, no per-element Python (the hits_blocked pattern)
-    si = np.searchsorted(verts, src)
-    di = np.searchsorted(verts, dst)
-    # symmetric CSR
-    heads = np.concatenate([si, di])
-    tails = np.concatenate([di, si])
-    order = np.argsort(heads, kind="stable")
-    heads, tails = heads[order], tails[order]
-    starts = np.searchsorted(heads, np.arange(n))
-    ends = np.searchsorted(heads, np.arange(n) + 1)
+    rowptr, colind, _ = build_csr(s, d, n)
     # priority order via Spark (one tiny job keeps the hash definition in
     # ONE place instead of reimplementing xxhash64/md5 driver-side)
     hdf = (
@@ -203,7 +192,7 @@ def _mis_blocked(ce: DataFrame, priority: str = "xxhash64") -> DataFrame:
     for i in pri:
         if state[i] == 0:
             state[i] = 1
-            nbrs = tails[starts[i]:ends[i]]
+            nbrs = colind[rowptr[i]:rowptr[i + 1]]
             state[nbrs[state[nbrs] == 0]] = -1
     return spark.createDataFrame(
         pd.DataFrame({"v": verts, "in_mis": state == 1}),

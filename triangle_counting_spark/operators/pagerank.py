@@ -341,7 +341,13 @@ def pagerank_blocked(
         return LoopResult(state=empty, iterations=0, converged=True, delta=0.0)
     dangling_mask = g.out_deg == 0.0
 
-    def update(state, gathered):
+    def gather(rank, s, d, w):
+        cut = np.flatnonzero(np.r_[True, d[1:] != d[:-1]])
+        return d[cut], np.add.reduceat(rank[s] * w, cut)
+
+    def update(state, dst, val):
+        gathered = np.zeros(n)
+        gathered[dst] = val
         dangling = state[dangling_mask].sum()
         new = (1.0 - damping) / n + damping * (gathered + dangling / n)
         delta = np.abs(new - state).max()
@@ -351,7 +357,7 @@ def pagerank_blocked(
         spark,
         g,
         np.full(n, 1.0 / n),
-        "sum",
+        gather,
         update,
         tol=tol,
         max_iter=max_iter,

@@ -45,7 +45,12 @@ def kcore_edges(edges: DataFrame, k: int, max_rounds: int = 100) -> DataFrame:
     removal semantics and the same ``max_rounds`` cap as the shuffle
     loop — measured 4.2 s → ~1.5 s at sf0.1, where the shuffle loop pays
     ~6 checkpoint+degree jobs). Beyond the cutoff: the original
-    localCheckpointed peel loop below."""
+    localCheckpointed peel loop below.
+
+    Executes eagerly in both tiers: the canonical edges are
+    localCheckpointed and the peel runs before this returns; the
+    returned frame reads the checkpointed edges (the numpy tier filters
+    them by a broadcast kept-vertex semi-join)."""
     from ..plans.planner import bcast_max_edges
 
     cur = canonical_edges(edges).localCheckpoint(eager=True)
@@ -54,12 +59,9 @@ def kcore_edges(edges: DataFrame, k: int, max_rounds: int = 100) -> DataFrame:
     if 0 < m <= bcast_max_edges(spark):
         import numpy as np
 
-        from .triangles import _compact_ids
+        from ..plans.blocked import collect_compact
 
-        pdf = cur.toPandas()
-        s_raw = pdf[SRC].to_numpy(dtype=np.int64)
-        d_raw = pdf[DST].to_numpy(dtype=np.int64)
-        cs, cd, verts = _compact_ids(np, s_raw, d_raw, m)
+        cs, cd, verts = collect_compact(cur)
         n = len(verts)
         alive = np.ones(m, dtype=bool)
         keep_v = np.ones(n, dtype=bool)
@@ -282,41 +284,20 @@ def coreness_blocked(
     (same integer fixpoint)."""
     import numpy as np
 
+    from ..plans.blocked import build_csr, collect_compact, csr_kernels
     from ..plans.iterate import LoopResult
 
     spark = edges.sparkSession
     ce = edges.select(SRC, DST) if assume_canonical else canonical_edges(edges)
-    pdf = ce.toPandas()
-    if len(pdf) == 0:
+    s, d, verts = collect_compact(ce)
+    if len(s) == 0:
         empty = spark.createDataFrame([], "v long, coreness long")
         return LoopResult(state=empty, iterations=0, converged=True, delta=0.0)
-
-    src = pdf[SRC].to_numpy(np.int64)
-    dst = pdf[DST].to_numpy(np.int64)
-    verts, codes = np.unique(np.concatenate([src, dst]), return_inverse=True)
     n = len(verts)
-    cs, cd = codes[: len(src)], codes[len(src):]
-    heads = np.concatenate([cs, cd])
-    tails = np.concatenate([cd, cs])
-    order = np.argsort(heads, kind="stable")
-    heads, tails = heads[order], tails[order]
-    starts = np.searchsorted(heads, np.arange(n))          # CSR row offsets
-    seg_of = heads                                         # row id per slot
-
-    ends = np.append(starts[1:], len(heads))
-
-    def seg_slots(ids: np.ndarray) -> np.ndarray:
-        """Concatenated CSR slot indices of the given vertex segments —
-        O(Σ deg(ids)), the vectorized multi-range arange."""
-        counts = ends[ids] - starts[ids]
-        total = int(counts.sum())
-        step = np.ones(total, dtype=np.int64)
-        step[0] = starts[ids[0]]
-        cum = np.cumsum(counts)[:-1]
-        step[cum] = starts[ids[1:]] - (starts[ids[:-1]] + counts[:-1]) + 1
-        return np.cumsum(step)
-
-    c = np.bincount(heads, minlength=n).astype(np.int64)   # c0 = degree
+    rowptr, tails, _ = build_csr(s, d, n)
+    c = (rowptr[1:] - rowptr[:-1]).astype(np.int64)       # c0 = degree
+    heads = np.repeat(np.arange(n, dtype=np.int64), c)     # row id per slot
+    segment_offsets, _, _ = csr_kernels()
     iters, converged = 0, False
     # Two optimizations over the naive "sort every adjacency list every
     # round", both value-preserving:
@@ -339,8 +320,8 @@ def coreness_blocked(
             converged = True
             break
         # neighbors of changed = the tails over changed vertices' segments
-        aff = np.unique(tails[seg_slots(changed_ids)])
-        slots = seg_slots(aff)
+        aff = np.unique(tails[segment_offsets(rowptr, changed_ids)[0]])
+        slots, _ = segment_offsets(rowptr, aff)
         dense = np.searchsorted(aff, heads[slots])
         own = c[aff]
         clipped = np.minimum(c[tails[slots]], own[dense])

@@ -40,13 +40,23 @@ partial/final aggregation model.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..plans import blocked
+from ..plans.blocked import (
+    _drop_shipped,
+    _ship_dir,
+    build_csr,
+    collect_compact,
+    compact_ids,
+    csr_kernels,
+    run_slices,
+    shipped_arrays,
+)
 from .adjacency import oriented_adjacency
 from .orientation import (
     DST,
@@ -58,60 +68,6 @@ from .orientation import (
 )
 
 _KERNEL_SCHEMA = "partial long"
-
-
-def _sum_slices(spark, kernel, k: int) -> int:
-    """Run a broadcast-CSR ``kernel`` over slice ids ``0..k-1``, one per
-    task, and sum its int64 partials on the driver: the k partial rows
-    come back in the same job, with no aggregate stage after it."""
-    rows = (
-        spark.range(0, k, 1, numPartitions=k)
-        .mapInPandas(kernel, schema=_KERNEL_SCHEMA)
-        .collect()
-    )
-    return sum(int(r["partial"]) for r in rows)
-
-
-def _compact_ids(np, s_raw, d_raw, m_in):
-    """Map raw vertex ids to compact int32 indices.
-
-    Dense-id fast path: when ids already live in a small range (RMAT,
-    relabeled graphs) the id IS the index — skips the unique/sort pass,
-    which is the single biggest serial cost of the broadcast tier. Sparse
-    ids (xxhash64 at 10^12 scale) take the unique(return_inverse) path.
-    """
-    mx = max(int(s_raw.max(initial=0)), int(d_raw.max(initial=0))) if m_in else 0
-    mn = min(int(s_raw.min(initial=0)), int(d_raw.min(initial=0))) if m_in else 0
-    if m_in and mn >= 0 and mx < max(4 * 2 * m_in, 1024) and mx < 2**31:
-        # small-range path: verts MUST be only the ids actually present —
-        # an arange over [0, mx] fabricates phantom vertices for gaps
-        # (e.g. 1-based ids never emit 0), corrupting every blocked-tier
-        # consumer that outputs per-vertex rows or computes n
-        present = np.zeros(mx + 1, dtype=bool)
-        present[s_raw] = True
-        present[d_raw] = True
-        if present.all():
-            verts = np.arange(mx + 1, dtype=np.int64)
-            return s_raw.astype(np.int32), d_raw.astype(np.int32), verts
-        rank = np.cumsum(present, dtype=np.int64) - 1  # compact rank per id
-        verts = np.flatnonzero(present).astype(np.int64)
-        return (
-            rank[s_raw].astype(np.int32),
-            rank[d_raw].astype(np.int32),
-            verts,
-        )
-    # hash-based factorize is O(m) vs sort-based np.unique O(m log m) —
-    # 8.6s -> ~1.5s on 16M sparse xxhash64 ids; then rank-remap the small
-    # vertex table so compact ids remain sorted by original id
-    import pandas as pd  # noqa: PLC0415
-
-    codes, uniq = pd.factorize(np.concatenate([s_raw, d_raw]), sort=False)
-    uniq = np.asarray(uniq, dtype=np.int64)
-    order = np.argsort(uniq)
-    rank = np.empty(len(uniq), dtype=np.int32)
-    rank[order] = np.arange(len(uniq), dtype=np.int32)
-    inv = rank[codes]
-    return inv[:m_in], inv[m_in:], uniq[order]
 
 
 def _id_stats(oriented: DataFrame) -> tuple[int, int | None, int | None]:
@@ -410,6 +366,7 @@ def _count_partitioned(oriented: DataFrame, n_blocks: int | None = None) -> Data
     # row count at RMAT-20 and stalls the cogroup sort
     need = e.select(F.col("pid").alias("pid_r"), DST).distinct()
     adj_rep = adj.join(need, adj["v"] == need[DST]).select("pid_r", "v", "nbrs")
+    segment_offsets, volume_chunks, _ = csr_kernels()
 
     def block_kernel(edges_t, adj_t):
         import numpy as np
@@ -436,8 +393,11 @@ def _count_partitioned(oriented: DataFrame, n_blocks: int | None = None) -> Data
         alen = pc.list_value_length(nbrs).to_numpy(zero_copy_only=False).astype(
             np.int64, copy=False
         )
-        aoff = np.zeros(len(av) + 1, dtype=np.int64)
-        np.cumsum(alen, out=aoff[1:])
+        # adjacency rowptr, plus one empty row past the end for a dst
+        # that has no adjacency row here
+        aoff = np.zeros(len(av) + 2, dtype=np.int64)
+        np.cumsum(alen, out=aoff[1:-1])
+        aoff[-1] = aoff[-2]
         av_order = np.argsort(av, kind="stable")
         av_sorted = av[av_order]
         # scatter-mask value space: ids already small enough index the mask
@@ -456,14 +416,14 @@ def _count_partitioned(oriented: DataFrame, n_blocks: int | None = None) -> Data
             mask = np.zeros(len(uniq), dtype=bool)
         # per-edge dst adjacency row — membership-checked: a dst with no
         # outgoing oriented edges has NO adjacency row here (the inner join
-        # dropped it) and closes no triangle
+        # dropped it), gets the empty row and closes no triangle
         pos = np.minimum(np.searchsorted(av_sorted, d), len(av_sorted) - 1)
         found = av_sorted[pos] == d
-        didx = np.where(found, av_order[pos], 0)
-        d_len = np.where(found, alen[didx], 0)
-        d_start = aoff[didx]
-        run_start = np.flatnonzero(np.r_[True, s[1:] != s[:-1]])
-        run_end = np.r_[run_start[1:], m]
+        didx = np.where(found, av_order[pos], len(av))
+        d_len = aoff[didx + 1] - aoff[didx]
+        # the local CSR rows: edges of run r are run_ptr[r]:run_ptr[r + 1]
+        run_ptr = np.r_[np.flatnonzero(np.r_[True, s[1:] != s[:-1]]), m]
+        run_start = run_ptr[:-1]
         run_tot = np.add.reduceat(d_len, run_start) if m else np.empty(0, np.int64)
         # TWO kernels by source size (VERDICT r2 #1, resolved by measurement
         # rather than the prescribed all-composite-key rewrite: batch-global
@@ -482,19 +442,12 @@ def _count_partitioned(oriented: DataFrame, n_blocks: int | None = None) -> Data
         SMALL_TOT = 2048
         total = 0
         big = run_tot >= SMALL_TOT
-        for lo, hi in zip(run_start[big], run_end[big]):
-            lens = d_len[lo:hi]
-            tot = int(lens.sum())
-            if tot == 0:
+        for lo, hi in zip(run_start[big], run_ptr[1:][big]):
+            offs, _ = segment_offsets(aoff, didx[lo:hi])
+            if len(offs) == 0:
                 continue
             row_codes = d_code[lo:hi]
             mask[row_codes] = True
-            starts = d_start[lo:hi]
-            offs = (
-                np.arange(tot, dtype=np.int64)
-                - np.repeat(np.cumsum(lens) - lens, lens)
-                + np.repeat(starts, lens)
-            )
             total += int(np.count_nonzero(mask[acat_code[offs]]))
             mask[row_codes] = False
         # small sources, grouped so one pass gathers ≤ CHUNK elements;
@@ -502,39 +455,17 @@ def _count_partitioned(oriented: DataFrame, n_blocks: int | None = None) -> Data
         CHUNK = 1 << 24
         small_idx = np.flatnonzero(~big)
         run_id = np.cumsum(np.r_[0, (s[1:] != s[:-1]).astype(np.int64)]) if m else None
-        g0 = 0
-        cum_small = np.cumsum(run_tot[small_idx])
-        while g0 < len(small_idx):
-            base = cum_small[g0 - 1] if g0 else 0
-            g1 = min(
-                max(int(np.searchsorted(cum_small, base + CHUNK)) + 1, g0 + 1),
-                len(small_idx),
-            )
-            runs = small_idx[g0:g1]
-            # edge ranges of these runs, concatenated
-            counts = run_end[runs] - run_start[runs]
-            tot_edges = int(counts.sum())
-            if tot_edges:
-                eidx = (
-                    np.arange(tot_edges, dtype=np.int64)
-                    - np.repeat(np.cumsum(counts) - counts, counts)
-                    + np.repeat(run_start[runs], counts)
-                )
-                lens = d_len[eidx]
-                tot = int(lens.sum())
-                if tot:
-                    offs = (
-                        np.arange(tot, dtype=np.int64)
-                        - np.repeat(np.cumsum(lens) - lens, lens)
-                        + np.repeat(d_start[eidx], lens)
-                    )
-                    keys_a = (run_id[eidx] << 32) | d_code[eidx]
-                    bkeys = np.repeat(run_id[eidx] << 32, lens) | acat_code[offs]
-                    bkeys.sort()
-                    lo_i = np.searchsorted(bkeys, keys_a, side="left")
-                    hi_i = np.searchsorted(bkeys, keys_a, side="right")
-                    total += int((hi_i - lo_i).sum())
-            g0 = g1
+        for c in volume_chunks(run_tot[small_idx], CHUNK):
+            # the edges of these runs, concatenated
+            eidx, _ = segment_offsets(run_ptr, small_idx[c])
+            offs, lens = segment_offsets(aoff, didx[eidx])
+            if len(offs):
+                keys_a = (run_id[eidx] << 32) | d_code[eidx]
+                bkeys = np.repeat(run_id[eidx] << 32, lens) | acat_code[offs]
+                bkeys.sort()
+                lo_i = np.searchsorted(bkeys, keys_a, side="left")
+                hi_i = np.searchsorted(bkeys, keys_a, side="right")
+                total += int((hi_i - lo_i).sum())
         return pa.table({"partial": pa.array([total], type=pa.int64())})
 
     partials = (
@@ -570,87 +501,50 @@ class BroadcastCSRTriangles:
     """
 
     def __init__(self, edges: DataFrame, assume_canonical: bool = False):
-        import numpy as np
-
         self.spark = edges.sparkSession
         ce = edges.select(SRC, DST) if assume_canonical else canonical_edges(edges)
-        pdf = ce.toPandas()
-        s_raw = pdf["src"].to_numpy(dtype=np.int64)
-        d_raw = pdf["dst"].to_numpy(dtype=np.int64)
-        m_in = len(s_raw)
-        s, d, verts = _compact_ids(np, s_raw, d_raw, m_in)
-        n = len(verts)
-        deg = np.bincount(s, minlength=n) + np.bincount(d, minlength=n)
-        # orient by (degree, id): src -> smaller endpoint under that order
-        fwd = (deg[s] < deg[d]) | ((deg[s] == deg[d]) & (s < d))
-        os_ = np.where(fwd, s, d)
-        od_ = np.where(fwd, d, s)
-        # (src, dst) sort via one composite-int64 argsort (2x over lexsort)
-        order = np.argsort(os_.astype(np.int64) << 32 | od_.astype(np.int64))
-        os_, od_ = os_[order], od_[order]
-        rowptr = np.zeros(n + 1, dtype=np.int64)
-        rowptr[1:] = np.cumsum(np.bincount(os_, minlength=n))
-        self.n = n
-        self.m = m_in
-        # ship CSR as mmap'd .npy files, not a pickled broadcast: one
-        # page-cache copy per machine instead of one unpickled copy per
-        # python worker (see plans/blocked.py measurement at RMAT-20)
-        from ..plans.blocked import _ship_arrays, _ship_dir
-
+        s, d, verts = collect_compact(ce)
+        rowptr, colind, _ = build_csr(s, d, len(verts), oriented=True)
+        self.n = len(verts)
+        self.m = len(s)
+        # ship CSR as mmap'd .npy files, not a pickled broadcast (see
+        # plans/blocked.py); they stay until unpersist, for many counts
         self._dir = _ship_dir()
-        self._files = _ship_arrays(
-            self.spark, {"rowptr": rowptr, "colind": od_}, self._dir
+        self._files = blocked._ship_arrays(
+            self.spark, {"rowptr": rowptr, "colind": colind}, self._dir
         )
         self._counted = False
 
     def count(self) -> int:
         """Run the probe kernel over the prebuilt broadcast CSR."""
-        from ..plans.blocked import fan_out
+        segment_offsets, _, _ = csr_kernels()
 
-        files = self._files
-        _k = fan_out(self.spark)
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np  # noqa: PLC0415
-            from pyspark import SparkFiles  # noqa: PLC0415
-
-            rp = np.asarray(np.load(SparkFiles.get(files["rowptr"]), mmap_mode="r"))
-            ci = np.asarray(np.load(SparkFiles.get(files["colind"]), mmap_mode="r"))
+        def body(a, sl, k):
+            rp, ci = a["rowptr"], a["colind"]
             nn = len(rp) - 1
             mask = np.zeros(nn, dtype=bool)
+            max_row = int((rp[1:] - rp[:-1]).max(initial=0))
             total = 0
-            for b in batches:
-                for sl in b["id"].to_numpy():
-                    # STRIDED source assignment: contiguous slicing skews
-                    # (front groups of a clique carry 6x average work);
-                    # striding src ids balances power-law inputs. Group v's
-                    # edge range IS its CSR row and its dst list IS its
-                    # neighbor list — one scatter, |row| probe rows.
-                    for v in range(int(sl), nn, _k):
-                        lo, hi = rp[v], rp[v + 1]
-                        if hi - lo < 2:
-                            continue  # <2 out-edges close no triangle at v
-                        nbrs = ci[lo:hi]
-                        mask[nbrs] = True
-                        lens = rp[nbrs + 1] - rp[nbrs]
-                        tot = int(lens.sum())
-                        if tot and tot <= 48 * len(nbrs):
-                            starts = rp[nbrs]
-                            offs = (
-                                np.arange(tot, dtype=np.int64)
-                                - np.repeat(np.cumsum(lens) - lens, lens)
-                                + np.repeat(starts, lens)
-                            )
-                            total += int(np.count_nonzero(mask[ci[offs]]))
-                        elif tot:
-                            for dk in nbrs:
-                                total += int(
-                                    np.count_nonzero(mask[ci[rp[dk] : rp[dk + 1]]])
-                                )
-                        mask[nbrs] = False
-            yield pd.DataFrame({"partial": [total]})
+            # Group v's edge range IS its CSR row and its dst list IS its
+            # neighbor list — one scatter, |row| probe rows.
+            for v in range(sl, nn, k):
+                lo, hi = rp[v], rp[v + 1]
+                if hi - lo < 2:
+                    continue  # <2 out-edges close no triangle at v
+                nbrs = ci[lo:hi]
+                mask[nbrs] = True
+                # len(nbrs) * max_row bounds the gather of one batched
+                # probe; past 4M elements, one probe row at a time
+                if len(nbrs) * max_row <= 1 << 22:
+                    offs, _ = segment_offsets(rp, nbrs)
+                    total += int(np.count_nonzero(mask[ci[offs]]))
+                else:
+                    for dk in nbrs:
+                        total += int(np.count_nonzero(mask[ci[rp[dk] : rp[dk + 1]]]))
+                mask[nbrs] = False
+            return total
 
-        total = _sum_slices(self.spark, kernel, _k)
+        total = run_slices(self.spark, self._files, body)
         self._counted = True
         return total
 
@@ -660,99 +554,49 @@ class BroadcastCSRTriangles:
         Spark. Without a count the files stay: an unread added file would
         fail the next task that lists it."""
         if self._counted:
-            from ..plans.blocked import _drop_shipped
-
             _drop_shipped(self.spark, self._dir)
 
 
-def _level_c1_bcast(horiz: DataFrame, cross: DataFrame) -> int:
-    """Broadcast-CSR c1 counter for the level strategy: Σ over horizontal
-    edges (u, v) of |N_cross(u) ∩ N_cross(v)| — the Δ-kernel's
-    intersection shape (:func:`_delta_bcast`) without the tag payload.
-    Zero shuffle; gated by the caller on the memory cutoff."""
-    import numpy as np
+def _common_neighbours_bcast(spark, s_raw, d_raw, pu_raw, pv_raw, tags=None) -> int:
+    """Broadcast-CSR common-neighbour kernel: Σ over the probe pairs
+    (pu, pv) of their common neighbours x in the graph (s, d), each hit
+    weighted by ``[6, 3, 2][tags(u, x) + tags(v, x)]`` when the graph's
+    edges carry 0/1 ``tags``, else 1. The level strategy's c1 leg and the
+    Δ-triangle count both run on it. Zero shuffle; gated by the callers on
+    the memory cutoff.
 
-    h = horiz.toPandas()
-    c = cross.toPandas()
-    if len(h) == 0 or len(c) == 0:
+    The CSR is symmetric with sorted rows (tags ride along as its
+    payload), so :func:`pair_hits` intersects a whole chunk of pairs with
+    one searchsorted over batch-composite keys."""
+    if len(s_raw) == 0 or len(pu_raw) == 0:
         return 0
-    hu = h[SRC].to_numpy(dtype=np.int64)
-    hv = h[DST].to_numpy(dtype=np.int64)
-    cs = c[SRC].to_numpy(dtype=np.int64)
-    cd = c[DST].to_numpy(dtype=np.int64)
-    nc = len(cs)
-    s, d, verts = _compact_ids(
-        np, np.concatenate([cs, hu]), np.concatenate([cd, hv]), nc + len(hu)
+    m = len(s_raw)
+    s, d, verts = compact_ids(
+        np, np.concatenate([s_raw, pu_raw]), np.concatenate([d_raw, pv_raw]), m + len(pu_raw)
     )
-    n = len(verts)
-    csi, hui = s[:nc].astype(np.int64), s[nc:].astype(np.int64)
-    cdi, hvi = d[:nc].astype(np.int64), d[nc:].astype(np.int64)
-    es = np.concatenate([csi, cdi])
-    ed = np.concatenate([cdi, csi])
-    order = np.argsort((es << 31) | ed)
-    colind = ed[order].astype(np.int32)
-    rowptr = np.zeros(n + 1, dtype=np.int64)
-    rowptr[1:] = np.cumsum(np.bincount(es, minlength=n))
+    rowptr, colind, tg = build_csr(s[:m], d[:m], len(verts), payload=tags)
+    arrays = {"rowptr": rowptr, "colind": colind, "pu": s[m:], "pv": d[m:]}
+    if tg is not None:
+        arrays["tags"] = tg
+    _, volume_chunks, pair_hits = csr_kernels()
 
-    spark = horiz.sparkSession
-    from ..plans.blocked import fan_out, shipped_arrays
-
-    arrays = {"rowptr": rowptr, "colind": colind, "hu": hui, "hv": hvi}
-    _k = fan_out(spark)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: PLC0415
-        from pyspark import SparkFiles  # noqa: PLC0415
-
-        rp = np.asarray(np.load(SparkFiles.get(files["rowptr"]), mmap_mode="r"))
-        ci = np.asarray(np.load(SparkFiles.get(files["colind"]), mmap_mode="r"))
-        hu_ = np.asarray(np.load(SparkFiles.get(files["hu"]), mmap_mode="r"))
-        hv_ = np.asarray(np.load(SparkFiles.get(files["hv"]), mmap_mode="r"))
+    def body(a, sl, k):
+        rp, ci, tg_ = a["rowptr"], a["colind"], a.get("tags")
         dg = rp[1:] - rp[:-1]
-        nh = len(hu_)
-        CHUNK = 1 << 24
+        idx = np.arange(sl, len(a["pu"]), k, dtype=np.int64)
+        u_all, v_all = a["pu"][idx], a["pv"][idx]
+        wlut = np.array([6, 3, 2], dtype=np.int64)
         total = 0
-        for b in batches:
-            for sl in b["id"].to_numpy():
-                eidx = np.arange(int(sl), nh, _k, dtype=np.int64)
-                if len(eidx) == 0:
-                    continue
-                vol = dg[hu_[eidx]] + dg[hv_[eidx]]
-                cum = np.cumsum(vol)
-                g0 = 0
-                while g0 < len(eidx):
-                    base = cum[g0 - 1] if g0 else 0
-                    g1 = min(
-                        max(int(np.searchsorted(cum, base + CHUNK)) + 1, g0 + 1),
-                        len(eidx),
-                    )
-                    ei = eidx[g0:g1]
-                    g0 = g1
-                    u, v = hu_[ei], hv_[ei]
-                    lu, lv = dg[u], dg[v]
-                    ta_n, tb_n = int(lu.sum()), int(lv.sum())
-                    if ta_n == 0 or tb_n == 0:
-                        continue
-                    loc = np.arange(len(ei), dtype=np.int64)
-                    offs_a = (
-                        np.arange(ta_n, dtype=np.int64)
-                        - np.repeat(np.cumsum(lu) - lu, lu)
-                        + np.repeat(rp[u], lu)
-                    )
-                    offs_b = (
-                        np.arange(tb_n, dtype=np.int64)
-                        - np.repeat(np.cumsum(lv) - lv, lv)
-                        + np.repeat(rp[v], lv)
-                    )
-                    key_a = (np.repeat(loc, lu) << 31) | ci[offs_a]
-                    key_b = (np.repeat(loc, lv) << 31) | ci[offs_b]
-                    pos = np.searchsorted(key_b, key_a)
-                    pos = np.minimum(pos, len(key_b) - 1)
-                    total += int(np.count_nonzero(key_b[pos] == key_a))
-        yield pd.DataFrame({"partial": [total]})
+        for c in volume_chunks(dg[u_all] + dg[v_all], 1 << 24):
+            _, ia, ib = pair_hits(rp, ci, u_all[c], v_all[c])
+            if tg_ is None:
+                total += len(ia)
+            else:
+                total += int(wlut[tg_[ia].astype(np.int64) + tg_[ib]].sum())
+        return total
 
     with shipped_arrays(spark, arrays) as files:
-        return _sum_slices(spark, kernel, _k)
+        return run_slices(spark, files, body)
 
 
 def _count_level(edges: DataFrame) -> DataFrame:
@@ -823,11 +667,17 @@ def _count_level(edges: DataFrame) -> DataFrame:
             )
         # G1 kernels, memory-tiered like G0 (round 6): below the bcast
         # cutoff c1 runs on the zero-shuffle intersection kernel
-        # (:func:`_level_c1_bcast` — measured ~5 s → ~1.5 s at sf0.1);
+        # (:func:`_common_neighbours_bcast` — measured ~5 s → ~1.5 s at sf0.1);
         # beyond it, the row-based wedge join below.
         m_total = labeled.count()
         if m_total <= bcast_max_edges(spark):
-            c1 = _level_c1_bcast(horiz, cross)
+            # c1: Σ over horizontal edges (u, v) of |N_cross(u) ∩ N_cross(v)|
+            h, c = horiz.toPandas(), cross.toPandas()
+            c1 = _common_neighbours_bcast(
+                spark,
+                c[SRC].to_numpy(dtype=np.int64), c[DST].to_numpy(dtype=np.int64),
+                h[SRC].to_numpy(dtype=np.int64), h[DST].to_numpy(dtype=np.int64),
+            )
             return _one_row(spark, (int(c1 + c2),), "triangles long")
         # Beyond-memory G1: wedge join restricted to cross edges. The wedge side
         # is Σ_horiz crossdeg(src) rows — hub-product-shaped on skewed
@@ -1014,134 +864,6 @@ def _canonical_select(edges: DataFrame) -> DataFrame:
     )
 
 
-def _delta_bcast(tagged: DataFrame) -> int:
-    """Broadcast-CSR Δ-triangle counter — the zero-shuffle tier.
-
-    ``tagged``: canonical (src < dst) union of G (is_new=false) and the
-    deduplicated new Δ edges (is_new=true). For every undirected Δ edge
-    {u, v} and every common neighbor x, the closing pair's tags weight
-    the triangle by [6, 3, 2][t_ux + t_vx] (both-old / mixed / both-new);
-    the grand total divides exactly by 6 (a triangle with k Δ edges is
-    seen from each of its Δ edges with weight 6/k). The CSR keeps a
-    parallel tag array; neighbor lists are sorted at build time, so the
-    batch-composite probe keys (edge_idx << 32 | x) are globally sorted
-    on the build side and ONE searchsorted per chunk intersects every Δ
-    edge simultaneously — the probe-kernel pattern (graph.c:322-351)
-    with a tag payload.
-    """
-    import numpy as np
-
-    pdf = tagged.toPandas()
-    if len(pdf) == 0:
-        return 0
-    return _delta_bcast_arrays(
-        tagged.sparkSession,
-        pdf[SRC].to_numpy(dtype=np.int64),
-        pdf[DST].to_numpy(dtype=np.int64),
-        pdf["is_new"].to_numpy(dtype=np.int8),
-    )
-
-
-def _delta_bcast_arrays(spark, s_raw, d_raw, t_raw) -> int:
-    """Array-input core of :func:`_delta_bcast` — also fed directly by
-    the narrow-id fast path in :func:`triangle_count_delta`, which
-    performs the dedup/anti-join in numpy and skips the Spark prep."""
-    import numpy as np
-
-    m_in = len(s_raw)
-    if m_in == 0:
-        return 0
-    n_delta = int(t_raw.sum())
-    if n_delta == 0:
-        return 0
-    s, d, verts = _compact_ids(np, s_raw, d_raw, m_in)
-    n = len(verts)
-    es = np.concatenate([s, d]).astype(np.int64)
-    ed = np.concatenate([d, s]).astype(np.int64)
-    et = np.concatenate([t_raw, t_raw])
-    # group by src with per-row sorted neighbors: one composite argsort
-    order = np.argsort((es << 31) | ed)
-    colind = ed[order].astype(np.int32)
-    tags = et[order]
-    deg = np.bincount(es, minlength=n).astype(np.int64)
-    rowptr = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(deg, out=rowptr[1:])
-    is_d = t_raw.astype(bool)
-    du = s[is_d].astype(np.int64)
-    dv = d[is_d].astype(np.int64)
-
-    from ..plans.blocked import fan_out, shipped_arrays
-
-    arrays = {
-        "rowptr": rowptr, "colind": colind, "tags": tags, "du": du, "dv": dv
-    }
-    _k = fan_out(spark)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: PLC0415
-        from pyspark import SparkFiles  # noqa: PLC0415
-
-        rp = np.asarray(np.load(SparkFiles.get(files["rowptr"]), mmap_mode="r"))
-        ci = np.asarray(np.load(SparkFiles.get(files["colind"]), mmap_mode="r"))
-        tg = np.asarray(np.load(SparkFiles.get(files["tags"]), mmap_mode="r"))
-        du_ = np.asarray(np.load(SparkFiles.get(files["du"]), mmap_mode="r"))
-        dv_ = np.asarray(np.load(SparkFiles.get(files["dv"]), mmap_mode="r"))
-        dg = rp[1:] - rp[:-1]
-        wlut = np.array([6, 3, 2], dtype=np.int64)
-        nd = len(du_)
-        CHUNK = 1 << 24
-        total = 0
-        for b in batches:
-            for sl in b["id"].to_numpy():
-                eidx = np.arange(int(sl), nd, _k, dtype=np.int64)
-                if len(eidx) == 0:
-                    continue
-                vol = dg[du_[eidx]] + dg[dv_[eidx]]
-                cum = np.cumsum(vol)
-                g0 = 0
-                while g0 < len(eidx):
-                    base = cum[g0 - 1] if g0 else 0
-                    g1 = min(
-                        max(int(np.searchsorted(cum, base + CHUNK)) + 1, g0 + 1),
-                        len(eidx),
-                    )
-                    ei = eidx[g0:g1]
-                    g0 = g1
-                    u, v = du_[ei], dv_[ei]
-                    lu, lv = dg[u], dg[v]
-                    ta_n = int(lu.sum())
-                    tb_n = int(lv.sum())
-                    if ta_n == 0 or tb_n == 0:
-                        continue
-                    loc = np.arange(len(ei), dtype=np.int64)
-                    offs_a = (
-                        np.arange(ta_n, dtype=np.int64)
-                        - np.repeat(np.cumsum(lu) - lu, lu)
-                        + np.repeat(rp[u], lu)
-                    )
-                    offs_b = (
-                        np.arange(tb_n, dtype=np.int64)
-                        - np.repeat(np.cumsum(lv) - lv, lv)
-                        + np.repeat(rp[v], lv)
-                    )
-                    key_a = (np.repeat(loc, lu) << 31) | ci[offs_a]
-                    key_b = (np.repeat(loc, lv) << 31) | ci[offs_b]
-                    ta = tg[offs_a]
-                    tb = tg[offs_b]
-                    # key_b is globally sorted (edges in local order, each
-                    # row's neighbors sorted at CSR build) — probe only
-                    pos = np.searchsorted(key_b, key_a)
-                    pos = np.minimum(pos, len(key_b) - 1)
-                    hit = key_b[pos] == key_a
-                    total += int(
-                        wlut[ta[hit].astype(np.int64) + tb[pos[hit]]].sum()
-                    )
-        yield pd.DataFrame({"partial": [total]})
-
-    with shipped_arrays(spark, arrays) as files:
-        return _sum_slices(spark, kernel, _k) // 6
-
-
 def triangle_count_delta(
     edges: DataFrame, delta_edges: DataFrame
 ) -> DataFrame:
@@ -1165,7 +887,7 @@ def triangle_count_delta(
     Two tiers (round 6): while |G ∪ Δ| fits the memory-derived cutoff
     (:func:`~triangle_counting_spark.plans.planner.bcast_max_edges`), the
     count runs on a zero-shuffle broadcast-CSR kernel
-    (:func:`_delta_bcast`): tagged symmetric CSR built once in numpy, Δ
+    (:func:`_common_neighbours_bcast`): tagged symmetric CSR built once in numpy, Δ
     edges intersected batch-at-a-time with ONE searchsorted over
     batch-composite keys (neighbor lists are pre-sorted, so the probe
     side needs no sort), tag weights applied via a 3-entry lookup.
@@ -1173,6 +895,9 @@ def triangle_count_delta(
     total. Beyond the cutoff: the wedge enumeration below over the
     symmetrized tagged edge set (row-based, AQE-splittable — no arrays,
     no kernels, no per-row skew ceiling).
+
+    Both tiers execute eagerly, with the tagged edge table persisted for
+    the call, and return a 1-row frame.
     """
     from ..plans.planner import bcast_max_edges
 
@@ -1184,13 +909,11 @@ def triangle_count_delta(
     # on the collected cleaned pairs (packed-key np.unique + searchsorted
     # anti), skipping four exchanges and one persist round-trip. Wide or
     # negative ids keep the Spark prep (the pair packing needs 31-bit
-    # ids; _compact_ids in the kernel handles wide ids from the Spark
+    # ids; compact_ids in the kernel handles wide ids from the Spark
     # path unchanged).
     g_clean = _canonical_select(edges)
     d_clean = _canonical_select(delta_edges)
     if g_clean.count() + d_clean.count() <= cutoff:
-        import numpy as np
-
         gp = g_clean.toPandas()
         dp = d_clean.toPandas()
         gs = gp[SRC].to_numpy(dtype=np.int64)
@@ -1209,17 +932,11 @@ def triangle_count_delta(
             if len(gk) and len(dk):
                 pos = np.minimum(np.searchsorted(gk, dk), len(gk) - 1)
                 dk = dk[gk[pos] != dk]
-            total = _delta_bcast_arrays(
-                spark,
-                np.concatenate([gk >> 31, dk >> 31]),
-                np.concatenate(
-                    [gk & 0x7FFFFFFF, dk & 0x7FFFFFFF]
-                ).astype(np.int64),
-                np.concatenate(
-                    [np.zeros(len(gk), dtype=np.int8),
-                     np.ones(len(dk), dtype=np.int8)]
-                ),
-            )
+            keys = np.r_[gk, dk]
+            tags = np.r_[np.zeros(len(gk), np.int8), np.ones(len(dk), np.int8)]
+            total = _common_neighbours_bcast(
+                spark, keys >> 31, keys & 0x7FFFFFFF, dk >> 31, dk & 0x7FFFFFFF, tags
+            ) // 6
             return _one_row(spark, (total,), "triangles_added long")
     g_old = canonical_edges(edges)
     # new edges only: Δ rows already present in G contribute nothing
@@ -1229,12 +946,23 @@ def triangle_count_delta(
     )
     tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        m_total = tagged.count()
-        if m_total <= bcast_max_edges(spark):
-            total = _delta_bcast(tagged)
-            return _one_row(spark, (total,), "triangles_added long")
+        if tagged.count() <= bcast_max_edges(spark):
+            pdf = tagged.toPandas()
+            s = pdf[SRC].to_numpy(dtype=np.int64)
+            d = pdf[DST].to_numpy(dtype=np.int64)
+            tags = pdf["is_new"].to_numpy(dtype=np.int8)
+            new = tags.astype(bool)
+            total = _common_neighbours_bcast(spark, s, d, s[new], d[new], tags) // 6
+        else:
+            total = _delta_rows(tagged)
     finally:
         tagged.unpersist()
+    return _one_row(spark, (total,), "triangles_added long")
+
+
+def _delta_rows(tagged: DataFrame) -> int:
+    """The beyond-memory Δ row plan of :func:`triangle_count_delta`, run
+    eagerly while the caller holds ``tagged`` persisted."""
     sym = tagged.select(SRC, DST, "is_new").union(
         tagged.select(
             F.col(DST).alias(SRC), F.col(SRC).alias(DST), F.col("is_new")
@@ -1254,23 +982,19 @@ def triangle_count_delta(
                        F.col("is_new").alias("new_vx")),
             [DST, "x"],
         )
-        row = closed.agg(
-            F.coalesce(
-                F.sum(
-                    F.when(~F.col("new_ux") & ~F.col("new_vx"), F.lit(6.0))
-                    .when(F.col("new_ux") & F.col("new_vx"), F.lit(2.0))
-                    .otherwise(F.lit(3.0))
-                ),
-                F.lit(0.0),
-            ).alias("w")
-        ).collect()[0]
         # a triangle with k Δ edges (k = 1 + new_ux + new_vx) appears once
         # per DIRECTED Δ edge it contains = 2k rows; weight 1/(2k) each →
-        # with the integer weights above (6, 3, 2) the divisor is 12
-        total = int(round(row["w"] / 12.0))
+        # with the integer weights (6, 3, 2) the divisor is 12. Integer
+        # sums stay exact past 2^53, where a double sum would round.
+        row = closed.agg(
+            F.expr(
+                "coalesce(sum(CAST(CASE WHEN NOT new_ux AND NOT new_vx THEN 6 "
+                "WHEN new_ux AND new_vx THEN 2 ELSE 3 END AS LONG)), 0L) div 12"
+            ).alias("w")
+        ).collect()[0]
     finally:
         sym.unpersist()
-    return _one_row(spark, (total,), "triangles_added long")
+    return int(row["w"])
 
 
 def triangle_count_estimate(
@@ -1433,36 +1157,15 @@ def _four_cycle_bcast(ce: DataFrame) -> int:
     its own oversized group — bounded by max_u Σ_{v∈N(u)} d_v, the same
     two-hub product the ``max_hub_degree`` cap exists to control).
     """
-    import numpy as np
-
     spark = ce.sparkSession
-    pdf = ce.toPandas()
-    s_raw = pdf[SRC].to_numpy(dtype=np.int64)
-    d_raw = pdf[DST].to_numpy(dtype=np.int64)
-    m_in = len(s_raw)
-    if m_in == 0:
+    s, d, verts = collect_compact(ce)
+    if len(s) == 0:
         return 0
-    s, d, verts = _compact_ids(np, s_raw, d_raw, m_in)
-    n = len(verts)
-    es = np.concatenate([s, d])
-    ed = np.concatenate([d, s])
-    order = np.argsort(es, kind="stable")
-    colind = ed[order]
-    deg = np.bincount(es, minlength=n).astype(np.int64)
-    rowptr = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(deg, out=rowptr[1:])
+    rowptr, colind, _ = build_csr(s, d, len(verts))
+    segment_offsets, volume_chunks, _ = csr_kernels()
 
-    from ..plans.blocked import fan_out, shipped_arrays
-
-    arrays = {"rowptr": rowptr, "colind": colind}
-    _k = fan_out(spark)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: PLC0415
-        from pyspark import SparkFiles  # noqa: PLC0415
-
-        rp = np.asarray(np.load(SparkFiles.get(files["rowptr"]), mmap_mode="r"))
-        ci = np.asarray(np.load(SparkFiles.get(files["colind"]), mmap_mode="r"))
+    def body(a, sl, k):
+        rp, ci = a["rowptr"], a["colind"]
         nn = len(rp) - 1
         dg = rp[1:] - rp[:-1]
         # two-hop gather volume per center, one reduceat over the flat
@@ -1471,58 +1174,27 @@ def _four_cycle_bcast(ce: DataFrame) -> int:
         nz = dg > 0
         if nz.any():
             w2[nz] = np.add.reduceat(dg[ci], rp[:-1][nz])
-        CHUNK = 1 << 24
+        centers = np.arange(sl, nn, k, dtype=np.int64)
         total = 0
-        for b in batches:
-            for sl in b["id"].to_numpy():
-                centers = np.arange(int(sl), nn, _k, dtype=np.int64)
-                if len(centers) == 0:
-                    continue
-                gv = w2[centers]
-                cum = np.cumsum(gv)
-                g0 = 0
-                while g0 < len(centers):
-                    base = cum[g0 - 1] if g0 else 0
-                    g1 = min(
-                        max(int(np.searchsorted(cum, base + CHUNK)) + 1, g0 + 1),
-                        len(centers),
-                    )
-                    cs = centers[g0:g1]
-                    g0 = g1
-                    n1 = dg[cs]
-                    t1 = int(n1.sum())
-                    if t1 == 0:
-                        continue
-                    offs1 = (
-                        np.arange(t1, dtype=np.int64)
-                        - np.repeat(np.cumsum(n1) - n1, n1)
-                        + np.repeat(rp[cs], n1)
-                    )
-                    nbrs = ci[offs1]
-                    n2 = dg[nbrs]
-                    t2 = int(n2.sum())
-                    if t2 == 0:
-                        continue
-                    offs2 = (
-                        np.arange(t2, dtype=np.int64)
-                        - np.repeat(np.cumsum(n2) - n2, n2)
-                        + np.repeat(rp[nbrs], n2)
-                    )
-                    w = ci[offs2].astype(np.int64, copy=False)
-                    pc = w2[cs]  # per-center two-hop count = Σ n2 by center
-                    u_local = np.repeat(
-                        np.arange(len(cs), dtype=np.int64), pc
-                    )
-                    keep = w > np.repeat(cs, pc)
-                    key = ((u_local << 31) | w)[keep]
-                    key.sort()
-                    seg = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
-                    runs = np.diff(np.r_[seg, len(key)])
-                    total += int((runs * (runs - 1)).sum())
-        yield pd.DataFrame({"partial": [total]})
+        for c in volume_chunks(w2[centers], 1 << 24):
+            cs = centers[c]
+            offs1, _ = segment_offsets(rp, cs)
+            offs2, _ = segment_offsets(rp, ci[offs1])
+            if len(offs2) == 0:
+                continue
+            w = ci[offs2].astype(np.int64, copy=False)
+            pc = w2[cs]  # per-center two-hop count = Σ n2 by center
+            u_local = np.repeat(np.arange(len(cs), dtype=np.int64), pc)
+            keep = w > np.repeat(cs, pc)
+            key = ((u_local << 31) | w)[keep]
+            key.sort()
+            seg = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+            runs = np.diff(np.r_[seg, len(key)])
+            total += int((runs * (runs - 1)).sum())
+        return total
 
-    with shipped_arrays(spark, arrays) as files:
-        return _sum_slices(spark, kernel, _k) // 4
+    with shipped_arrays(spark, {"rowptr": rowptr, "colind": colind}) as files:
+        return run_slices(spark, files, body) // 4
 
 
 def four_cycle_count(
@@ -1549,7 +1221,8 @@ def four_cycle_count(
     task-local numpy sort/run-length, only int64 partials move). Beyond
     the cutoff, the row-based wedge join + hash aggregate below — it
     streams and spills safely at any scale and AQE splits skewed wedge
-    partitions.
+    partitions. Both tiers execute eagerly, with the canonical edge table
+    persisted for the call, and return a 1-row ``(four_cycles)`` frame.
 
     ``max_hub_degree``: exact global C4 at 100 TB is quadratic in the
     largest hub degree (one 10⁶-degree vertex alone yields ~5·10¹¹ wedge
@@ -1642,123 +1315,39 @@ def _four_clique_bcast(ce: DataFrame) -> int:
     cross tasks. Work is Σ_e |S_e|-weighted out-degrees — the same
     triangle-pair space the row plan's self-join walks, at memcpy speed.
     """
-    import numpy as np
-
     spark = ce.sparkSession
-    pdf = ce.toPandas()
-    s_raw = pdf[SRC].to_numpy(dtype=np.int64)
-    d_raw = pdf[DST].to_numpy(dtype=np.int64)
-    m_in = len(s_raw)
-    if m_in == 0:
+    s, d, verts = collect_compact(ce)
+    if len(s) == 0:
         return 0
-    s, d, verts = _compact_ids(np, s_raw, d_raw, m_in)
-    n = len(verts)
-    deg = np.bincount(s, minlength=n) + np.bincount(d, minlength=n)
-    fwd = (deg[s] < deg[d]) | ((deg[s] == deg[d]) & (s < d))
-    os_ = np.where(fwd, s, d).astype(np.int64)
-    od_ = np.where(fwd, d, s).astype(np.int64)
-    order = np.argsort((os_ << 31) | od_)
-    os_, od_ = os_[order], od_[order]
-    rowptr = np.zeros(n + 1, dtype=np.int64)
-    rowptr[1:] = np.cumsum(np.bincount(os_, minlength=n))
+    rowptr, colind, _ = build_csr(s, d, len(verts), oriented=True)
+    segment_offsets, volume_chunks, pair_hits = csr_kernels()
 
-    from ..plans.blocked import fan_out, shipped_arrays
-
-    arrays = {
-        "rowptr": rowptr,
-        "colind": od_.astype(np.int32),
-        "esrc": os_.astype(np.int32),
-    }
-    _k = fan_out(spark)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: PLC0415
-        from pyspark import SparkFiles  # noqa: PLC0415
-
-        rp = np.asarray(np.load(SparkFiles.get(files["rowptr"]), mmap_mode="r"))
-        ci = np.asarray(np.load(SparkFiles.get(files["colind"]), mmap_mode="r"))
-        esrc = np.asarray(np.load(SparkFiles.get(files["esrc"]), mmap_mode="r"))
+    def body(a, sl, k):
+        rp, ci = a["rowptr"], a["colind"]
         dg = rp[1:] - rp[:-1]
-        m = len(esrc)
-        CHUNK = 1 << 24
+        eidx = np.arange(sl, len(ci), k, dtype=np.int64)
+        # the DAG edges (a → b) of this slice: a is the edge's CSR row
+        a_all = np.searchsorted(rp, eidx, side="right") - 1
+        b_all = ci[eidx].astype(np.int64)
         total = 0
-        for b in batches:
-            for sl in b["id"].to_numpy():
-                eidx = np.arange(int(sl), m, _k, dtype=np.int64)
-                if len(eidx) == 0:
+        for c in volume_chunks(dg[a_all] + dg[b_all], 1 << 24):
+            # S_e = N+(a) ∩ N+(b), as sorted keys (e << 31 | member)
+            e, ia, _ = pair_hits(rp, ci, a_all[c], b_all[c])
+            s_c = ci[ia].astype(np.int64)
+            s_key = (e << 31) | s_c
+            # DAG edges inside each S_e: probe every member's out-list
+            # against the per-edge S key set, sub-chunked on the volume
+            for c2 in volume_chunks(dg[s_c], 1 << 24):
+                offs_c, lc = segment_offsets(rp, s_c[c2])
+                if len(offs_c) == 0:
                     continue
-                a_all = esrc[eidx].astype(np.int64)
-                b_all = ci[eidx].astype(np.int64)
-                vol = dg[a_all] + dg[b_all]
-                cum = np.cumsum(vol)
-                g0 = 0
-                while g0 < len(eidx):
-                    base = cum[g0 - 1] if g0 else 0
-                    g1 = min(
-                        max(int(np.searchsorted(cum, base + CHUNK)) + 1, g0 + 1),
-                        len(eidx),
-                    )
-                    ea, eb = a_all[g0:g1], b_all[g0:g1]
-                    g0 = g1
-                    la, lb = dg[ea], dg[eb]
-                    ta, tb = int(la.sum()), int(lb.sum())
-                    if ta == 0 or tb == 0:
-                        continue
-                    loc = np.arange(len(ea), dtype=np.int64)
-                    offs_a = (
-                        np.arange(ta, dtype=np.int64)
-                        - np.repeat(np.cumsum(la) - la, la)
-                        + np.repeat(rp[ea], la)
-                    )
-                    offs_b = (
-                        np.arange(tb, dtype=np.int64)
-                        - np.repeat(np.cumsum(lb) - lb, lb)
-                        + np.repeat(rp[eb], lb)
-                    )
-                    key_a = (np.repeat(loc, la) << 31) | ci[offs_a]
-                    key_b = (np.repeat(loc, lb) << 31) | ci[offs_b]
-                    # S_e = N+(a) ∩ N+(b): probe the smaller side pattern
-                    # (both sorted by construction)
-                    pos = np.searchsorted(key_b, key_a)
-                    pos = np.minimum(pos, len(key_b) - 1)
-                    hit = key_b[pos] == key_a
-                    s_key = key_a[hit]          # (e << 31 | c), sorted
-                    s_c = (s_key & 0x7FFFFFFF).astype(np.int64)
-                    if len(s_c) == 0:
-                        continue
-                    # phase 2: DAG edges inside each S_e — probe every
-                    # member's out-list against the per-edge S key set,
-                    # sub-chunked on the gathered volume
-                    lc_all = dg[s_c]
-                    cum2 = np.cumsum(lc_all)
-                    h0 = 0
-                    while h0 < len(s_c):
-                        base2 = cum2[h0 - 1] if h0 else 0
-                        h1 = min(
-                            max(int(np.searchsorted(cum2, base2 + CHUNK)) + 1,
-                                h0 + 1),
-                            len(s_c),
-                        )
-                        cc = s_c[h0:h1]
-                        ekey = s_key[h0:h1] & ~np.int64(0x7FFFFFFF)
-                        h0 = h1
-                        lc = dg[cc]
-                        tc = int(lc.sum())
-                        if tc == 0:
-                            continue
-                        offs_c = (
-                            np.arange(tc, dtype=np.int64)
-                            - np.repeat(np.cumsum(lc) - lc, lc)
-                            + np.repeat(rp[cc], lc)
-                        )
-                        probe = np.repeat(ekey, lc) | ci[offs_c]
-                        pos2 = np.searchsorted(s_key, probe)
-                        pos2 = np.minimum(pos2, len(s_key) - 1)
-                        total += int(np.count_nonzero(s_key[pos2] == probe))
-        yield pd.DataFrame({"partial": [total]})
+                probe = np.repeat(e[c2] << 31, lc) | ci[offs_c]
+                pos = np.minimum(np.searchsorted(s_key, probe), len(s_key) - 1)
+                total += int(np.count_nonzero(s_key[pos] == probe))
+        return total
 
-    with shipped_arrays(spark, arrays) as files:
-        return _sum_slices(spark, kernel, _k)
+    with shipped_arrays(spark, {"rowptr": rowptr, "colind": colind}) as files:
+        return run_slices(spark, files, body)
 
 
 def four_clique_count(

@@ -1,28 +1,48 @@
-"""CSR-blocked iteration — the broadcast-tier substrate for PageRank / CC /
-label propagation (north rule: "iterative sparse gather-scatter over
-CSR-blocked edge partitions").
+"""The broadcast-CSR substrate behind every numpy tier.
 
-Tiering (mirrors the reference's plan choice by graph statistic,
-tc.c:1844-1911):
+Every tier that runs numpy over the whole graph — the broadcast-CSR
+("bcast") kernels of the triangle, level-c1, delta, four-cycle and
+four-clique counts, the blocked PageRank / CC / label-propagation rounds,
+and the driver-side sweeps (k-core, BFS, distances, betweenness) — is
+built from the same layers, all in this module:
 
-- **blocked tier** (this module): the per-vertex STATE vector fits in
-  executor memory (8-16 B/vertex → ~10^8 vertices in a few GB). Edges are
-  partitioned once into P dst-disjoint CSR blocks that live as numpy arrays
-  inside long-lived Arrow tasks; each iteration broadcasts the state
-  vector, every block gathers contributions for its own dst range with
-  np.add.reduceat (vectorized, zero Python-per-row), and the driver
-  assembles + convergence-checks the next vector. Per-iteration cost:
-  1 broadcast + P map tasks + 1 small collect — NO shuffle at all, with
-  P = :func:`fan_out` over the symmetrized edge count (one block per
-  4M edges, at most one wave of tasks).
-- **shuffle tier** (operators/pagerank.py etc. + plans/iterate.py): state
-  itself is distributed; one join + one aggregate per iteration. Used when
-  vertices don't fit a vector (10^11+), at the cost of per-iteration
-  shuffles.
+1. **collect + compact**: the edge list comes to the driver through
+   Arrow ``toPandas``; :func:`compact_ids` maps its ids to dense int32
+   codes in original-id order.
+2. **CSR**: :func:`build_csr` is the one builder — ``rowptr`` int64,
+   ``colind`` int32, every row sorted ascending (the reference's
+   ``GRAPH_TYPE``), either symmetric or oriented by (degree, id), with an
+   optional per-edge payload kept aligned with ``colind``.
+3. **ship**: :func:`shipped_arrays` writes the arrays as ``.npy`` files
+   and registers them with ``sc.addFile``; tasks ``np.load`` them with
+   ``mmap_mode="r"``, one page-cache copy per machine instead of one
+   unpickled broadcast per Python worker (a pickled 540 MB graph took 17 GB
+   and a 100+ s first round at RMAT-20 on 32 workers).
+4. **run**: :func:`run_slices` is the one ``mapInPandas`` shell of the
+   counting kernels: one task per strided slice id ``0..fan_out-1``, each
+   calling ``body(arrays, slice, k) -> int``, partials summed on the
+   driver. :func:`blocked_rounds` is the iterative shell: per round the
+   state vector is broadcast, each dst-block applies its caller's reducer,
+   and the driver applies the caller's update.
+5. **in-kernel helpers**: :func:`csr_kernels` returns
+   ``segment_offsets``, ``volume_chunks`` and ``pair_hits``, the gather,
+   chunking and sorted pair-intersection steps the kernels share.
 
-Checkpoint/resume: the state vector + iteration meta are written as
-parquet via pyarrow every ``checkpoint_every`` iterations (atomic
-write-then-rename), same contract as plans/iterate.py.
+Pickle-by-value rule: a function that runs inside a task must not be a
+module-level function of this package. cloudpickle ships those by
+reference, so every worker would need the package importable. Kernels,
+reducers and the helpers they call are closures (made inside a function),
+which cloudpickle ships by value.
+
+Tiering mirrors the reference's plan choice by graph statistic
+(tc.c:1844-1911): these tiers run while the graph fits executor memory
+(``plans/planner.py``); beyond it the shuffle tiers take over
+(operators/pagerank.py etc. + plans/iterate.py), with state distributed
+and one join + one aggregate per iteration.
+
+Checkpoint/resume of :func:`blocked_rounds`: the state vector + iteration
+meta are written as parquet via pyarrow every ``checkpoint_every``
+iterations (atomic write-then-rename), same contract as plans/iterate.py.
 """
 
 from __future__ import annotations
@@ -61,6 +81,184 @@ def fan_out(spark: SparkSession, edges: int | None = None) -> int:
     return max(1, min(wave, -(-edges // EDGES_PER_BLOCK)))
 
 
+def compact_ids(np, s_raw, d_raw, m_in):
+    """Map raw vertex ids to compact int32 indices: ``(s, d, verts)`` with
+    ``verts`` the sorted ids present, so code order is id order.
+
+    Dense-id fast path: when ids already live in a small range (RMAT,
+    relabeled graphs) the id IS the index — skips the unique/sort pass,
+    which is the single biggest serial cost of the broadcast tier. Sparse
+    ids (xxhash64 at 10^12 scale) take the hash-factorize path.
+    """
+    mx = max(int(s_raw.max(initial=0)), int(d_raw.max(initial=0))) if m_in else 0
+    mn = min(int(s_raw.min(initial=0)), int(d_raw.min(initial=0))) if m_in else 0
+    if m_in and mn >= 0 and mx < max(4 * 2 * m_in, 1024) and mx < 2**31:
+        # small-range path: verts MUST be only the ids actually present —
+        # an arange over [0, mx] fabricates phantom vertices for gaps
+        # (e.g. 1-based ids never emit 0), corrupting every blocked-tier
+        # consumer that outputs per-vertex rows or computes n
+        present = np.zeros(mx + 1, dtype=bool)
+        present[s_raw] = True
+        present[d_raw] = True
+        if present.all():
+            verts = np.arange(mx + 1, dtype=np.int64)
+            return s_raw.astype(np.int32), d_raw.astype(np.int32), verts
+        rank = np.cumsum(present, dtype=np.int64) - 1  # compact rank per id
+        verts = np.flatnonzero(present).astype(np.int64)
+        return (
+            rank[s_raw].astype(np.int32),
+            rank[d_raw].astype(np.int32),
+            verts,
+        )
+    # hash-based factorize is O(m) vs sort-based np.unique O(m log m) —
+    # 8.6s -> ~1.5s on 16M sparse xxhash64 ids; then rank-remap the small
+    # vertex table so compact ids remain sorted by original id
+    codes, uniq = pd.factorize(np.concatenate([s_raw, d_raw]), sort=False)
+    uniq = np.asarray(uniq, dtype=np.int64)
+    order = np.argsort(uniq)
+    rank = np.empty(len(uniq), dtype=np.int32)
+    rank[order] = np.arange(len(uniq), dtype=np.int32)
+    inv = rank[codes]
+    return inv[:m_in], inv[m_in:], uniq[order]
+
+
+def collect_compact(edges: DataFrame):
+    """Collect a (src, dst) frame to the driver (Arrow ``toPandas``) and
+    :func:`compact_ids` it: ``(s, d, verts)``."""
+    pdf = edges.toPandas()
+    return compact_ids(
+        np,
+        pdf["src"].to_numpy(dtype=np.int64),
+        pdf["dst"].to_numpy(dtype=np.int64),
+        len(pdf),
+    )
+
+
+def build_csr(s, d, n: int, *, oriented: bool = False, payload=None):
+    """The CSR of compact edges ``(s, d)`` over ``n`` vertices:
+    ``(rowptr int64, colind int32, payload)``, every row sorted ascending.
+
+    ``oriented=False``: symmetric — each edge is stored in both rows, and
+    ``payload`` (one value per input edge) is repeated for both. With
+    ``oriented=True`` each edge is stored once, in the row of its lower
+    endpoint under (degree, id): the degree-ordered DAG of graph.c:207-274,
+    whose rows are O(√m) long. ``payload`` comes back permuted like
+    ``colind`` (``None`` stays ``None``).
+    """
+    assert n < 2**31, "compact ids are int32"
+    if oriented:
+        deg = np.bincount(s, minlength=n) + np.bincount(d, minlength=n)
+        fwd = (deg[s] < deg[d]) | ((deg[s] == deg[d]) & (s < d))
+        s, d = np.where(fwd, s, d), np.where(fwd, d, s)
+    else:
+        s, d = np.concatenate([s, d]), np.concatenate([d, s])
+        if payload is not None:
+            payload = np.concatenate([payload, payload])
+    # (row, col) order via one composite-int64 argsort (2x over lexsort)
+    key = s.astype(np.int64)
+    key <<= 31
+    key |= d
+    order = np.argsort(key)
+    del key
+    rowptr = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.bincount(s, minlength=n), out=rowptr[1:])
+    colind = d[order].astype(np.int32, copy=False)
+    return rowptr, colind, None if payload is None else payload[order]
+
+
+def csr_kernels():
+    """``(segment_offsets, volume_chunks, pair_hits)``, the steps the
+    numpy kernels share, returned as CLOSURES so a kernel that calls them
+    ships them by value (see the pickle-by-value rule above)."""
+
+    def segment_offsets(rowptr, rows):
+        """Positions in ``colind`` of the CSR rows ``rows``, concatenated,
+        and each row's length: ``(offs int64, lens)``."""
+        starts = rowptr[rows]
+        lens = rowptr[rows + 1] - starts
+        ends = np.cumsum(lens)
+        tot = int(ends[-1]) if len(ends) else 0
+        return np.arange(tot, dtype=np.int64) - np.repeat(ends - lens - starts, lens), lens
+
+    def volume_chunks(vol, chunk):
+        """Consecutive slices of items whose summed ``vol`` reaches
+        ``chunk`` by at most one item, so per-chunk temporaries stay
+        bounded; an item bigger than ``chunk`` is a slice of its own."""
+        cum = np.cumsum(vol)
+        g0 = 0
+        while g0 < len(cum):
+            base = cum[g0 - 1] if g0 else 0
+            g1 = min(max(int(np.searchsorted(cum, base + chunk)) + 1, g0 + 1), len(cum))
+            yield slice(g0, g1)
+            g0 = g1
+
+    def pair_hits(rp, ci, u, v):
+        """Common neighbours of the vertex pairs ``(u[i], v[i])``:
+        ``(i, ia, ib)`` per hit, with ``ia`` / ``ib`` its positions in the
+        rows of ``u[i]`` / ``v[i]``. Rows are sorted, so the composite keys
+        ``(i << 31) | neighbour`` of each side are sorted too, and ONE
+        searchsorted intersects every pair (the probe kernel,
+        graph.c:322-351)."""
+        offs_a, lu = segment_offsets(rp, u)
+        offs_b, lv = segment_offsets(rp, v)
+        if len(offs_a) == 0 or len(offs_b) == 0:
+            none = np.empty(0, dtype=np.int64)
+            return none, none, none
+        loc = np.arange(len(u), dtype=np.int64)
+        pair = np.repeat(loc, lu)
+        key_a = (pair << 31) | ci[offs_a]
+        key_b = (np.repeat(loc, lv) << 31) | ci[offs_b]
+        pos = np.minimum(np.searchsorted(key_b, key_a), len(key_b) - 1)
+        hit = key_b[pos] == key_a
+        return pair[hit], offs_a[hit], offs_b[pos[hit]]
+
+    return segment_offsets, volume_chunks, pair_hits
+
+
+def _make_loader():
+    """``load(files)``: the shipped arrays by name, mmap'd read-only
+    (a closure, so tasks ship it by value)."""
+
+    def load(files):
+        from pyspark import SparkFiles  # noqa: PLC0415
+
+        return {
+            name: np.asarray(np.load(SparkFiles.get(f), mmap_mode="r"))
+            for name, f in files.items()
+        }
+
+    return load
+
+
+def run_slices(spark: SparkSession, files: dict[str, str], body) -> int:
+    """Run ``body(arrays, slice, k) -> int`` once per slice id
+    ``0..k-1`` (``k = fan_out(spark)``, one task each) over the shipped
+    ``files`` and return the sum of its int64 partials.
+
+    Kernels stride their work by slice (vertex or edge ``i`` goes to slice
+    ``i % k``): contiguous ranges skew (the front groups of a clique carry
+    6x the average work), striding balances power-law inputs. The k partial
+    rows come back in the same job, with no aggregate stage after it.
+    """
+    k = fan_out(spark)
+    load = _make_loader()
+
+    def kernel(batches):
+        arrays = load(files)
+        total = 0
+        for b in batches:
+            for sl in b["id"].to_numpy():
+                total += int(body(arrays, int(sl), k))
+        yield pd.DataFrame({"partial": [total]})
+
+    rows = (
+        spark.range(0, k, 1, numPartitions=k)
+        .mapInPandas(kernel, schema="partial long")
+        .collect()
+    )
+    return sum(int(r["partial"]) for r in rows)
+
+
 @dataclass
 class BlockedGraph:
     """Driver-resident compact graph: ids + per-block CSR over dst."""
@@ -77,7 +275,8 @@ class BlockedGraph:
 def build_blocked(
     edges_pdf: pd.DataFrame, n_blocks: int, edge_weight: str | None = None
 ) -> BlockedGraph:
-    """Compact + symmetrize + sort edges by (block(dst), dst).
+    """Compact + symmetrize edges into a CSR whose rows are destinations,
+    cut into ``n_blocks`` dst ranges.
 
     edges_pdf: canonical (src < dst) undirected edge list; for
     edge_weight="weighted" it must also carry a ``weight`` column.
@@ -85,38 +284,32 @@ def build_blocked(
     or "weighted" (w = weight/Σ_out weight — weighted PageRank; out_deg
     then holds the per-vertex out-STRENGTH, still 0 ⇔ dangling).
     """
-    from ..operators.triangles import _compact_ids
-
-    s_raw = edges_pdf["src"].to_numpy(dtype=np.int64)
-    d_raw = edges_pdf["dst"].to_numpy(dtype=np.int64)
-    m = len(s_raw)
-    # int32 compact ids halve the memory traffic of every later gather;
-    # dense-id inputs skip the unique pass entirely
-    s, d, verts = _compact_ids(np, s_raw, d_raw, m)
-    # symmetrize: undirected gather needs both directions
-    src = np.concatenate([s, d])
-    dst = np.concatenate([d, s])
+    # int32 compact ids halve the memory traffic of every later gather
+    s, d, verts = compact_ids(
+        np,
+        edges_pdf["src"].to_numpy(dtype=np.int64),
+        edges_pdf["dst"].to_numpy(dtype=np.int64),
+        len(edges_pdf),
+    )
     n = len(verts)
-    if edge_weight == "weighted":
-        w_half = edges_pdf["weight"].to_numpy(dtype=np.float64)
-        sym_w = np.concatenate([w_half, w_half])
-        out_deg = np.bincount(src, weights=sym_w, minlength=n)
-    else:
-        sym_w = None
-        out_deg = np.bincount(src, minlength=n).astype(np.float64)
-    # block(dst) is monotone in dst → a single stable argsort on dst gives
-    # block-grouped dst-sorted order (no lexsort needed)
-    order = np.argsort(dst, kind="stable")
-    src, dst = src[order], dst[order]
+    w_half = (
+        edges_pdf["weight"].to_numpy(dtype=np.float64)
+        if edge_weight == "weighted"
+        else None
+    )
+    # symmetric, so row v lists the sources whose contributions v gathers
+    rowptr, src, sym_w = build_csr(s, d, n, payload=w_half)
+    dst = np.repeat(np.arange(n, dtype=np.int32), np.diff(rowptr))
+    out_deg = np.bincount(src, weights=sym_w, minlength=n).astype(np.float64, copy=False)
     starts = ((np.arange(n_blocks + 1, dtype=np.int64) * n) + n_blocks - 1) // max(
         n_blocks, 1
     )
-    bounds = np.searchsorted(dst, np.minimum(starts, n))
+    bounds = rowptr[np.minimum(starts, n)]
     weight = None
     if edge_weight == "inv_outdeg":
         weight = 1.0 / out_deg[src]
     elif edge_weight == "weighted":
-        weight = sym_w[order] / out_deg[src]
+        weight = sym_w / out_deg[src]
     return BlockedGraph(verts, src, dst, out_deg, n_blocks, bounds, weight)
 
 
@@ -124,7 +317,7 @@ def blocked_rounds(
     spark: SparkSession,
     g: BlockedGraph,
     state0: np.ndarray,
-    gather: str,
+    reduce,
     update,
     tol: float,
     max_iter: int,
@@ -135,9 +328,11 @@ def blocked_rounds(
 ) -> tuple[np.ndarray, int, bool, list[dict]]:
     """Run blocked gather-scatter rounds.
 
-    gather: "sum" (PageRank contributions) or "min" (hash-min CC).
-    update(state, gathered) -> (new_state, delta).
-    Returns (state, iterations, converged, metrics).
+    reduce(state, src, dst, weight) -> (dsts, vals): one block's gather,
+    run in its task over the block's dst-sorted edges (``weight`` is
+    ``None`` for a graph without one); a closure, shipped by value.
+    update(state, dsts, vals) -> (new_state, delta), run on the driver over
+    every block's rows. Returns (state, iterations, converged, metrics).
     """
     import time
 
@@ -156,42 +351,21 @@ def blocked_rounds(
     if start_iter >= max_iter:
         return state, start_iter, False, metrics
 
-    mode_min = gather == "min"
+    load = _make_loader()
 
     def make_round(bc_state):
         def fn(batches):
-            # load inline (NOT via the module-level helper): module
-            # functions pickle by reference and would require the package
-            # on every worker's import path
-            from pyspark import SparkFiles  # noqa: PLC0415
-            import numpy as np  # noqa: PLC0415
-
-            arrs = {
-                name: np.asarray(np.load(SparkFiles.get(f), mmap_mode="r"))
-                for name, f in graph_files.items()
-            }
-            s_, d_, bounds = arrs["src"], arrs["dst"], arrs["bounds"]
-            w_ = arrs.get("weight")
+            a = load(graph_files)
+            s_, d_, bounds, w_ = a["src"], a["dst"], a["bounds"], a.get("weight")
             vec = bc_state.value
             for b in batches:
                 for blk in b["id"].to_numpy():
                     lo, hi = bounds[blk], bounds[blk + 1]
-                    if hi <= lo:
-                        yield pd.DataFrame({"dst": [], "val": []}).astype(
-                            {"dst": "int64", "val": "float64"}
+                    if hi > lo:
+                        dsts, vals = reduce(
+                            vec, s_[lo:hi], d_[lo:hi], None if w_ is None else w_[lo:hi]
                         )
-                        continue
-                    dd = d_[lo:hi]
-                    contrib = vec[s_[lo:hi]]
-                    if w_ is not None:
-                        contrib = contrib * w_[lo:hi]
-                    # dst-sorted within block → segment reduce
-                    cut = np.flatnonzero(np.r_[True, dd[1:] != dd[:-1]])
-                    if mode_min:
-                        red = np.minimum.reduceat(contrib, cut)
-                    else:
-                        red = np.add.reduceat(contrib, cut)
-                    yield pd.DataFrame({"dst": dd[cut], "val": red})
+                        yield pd.DataFrame({"dst": dsts, "val": vals})
 
         return fn
 
@@ -200,12 +374,6 @@ def blocked_rounds(
     slices = spark.range(0, n_blocks, 1, numPartitions=n_blocks)
     converged = False
     delta = float("inf")
-    # Ship the (large, immutable) graph arrays as .npy FILES + mmap, not as
-    # a pickled broadcast: a pickled 540 MB graph is unpickled into every
-    # python worker process (32 workers -> 17 GB RAM and a 100+ s first
-    # iteration, measured at RMAT-20). np.load(mmap_mode='r') keeps ONE
-    # page-cache copy per machine and loads in microseconds; sc.addFile
-    # distributes the files to executors on a real cluster.
     with shipped_arrays(
         spark,
         {
@@ -223,11 +391,9 @@ def blocked_rounds(
             )
             pdf = rows.toPandas()
             bc_state.destroy()
-            gathered = np.full(
-                len(g.verts), np.inf if mode_min else 0.0, dtype=np.float64
+            state, delta = update(
+                state, pdf["dst"].to_numpy(dtype=np.int64), pdf["val"].to_numpy()
             )
-            gathered[pdf["dst"].to_numpy(dtype=np.int64)] = pdf["val"].to_numpy()
-            state, delta = update(state, gathered)
             m = {"iteration": i, "delta": float(delta), "sec": time.time() - t0}
             if checkpoint_dir and (i % checkpoint_every == 0 or delta <= tol):
                 _write(checkpoint_dir, fingerprint, i, state, float(delta))
