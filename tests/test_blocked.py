@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import numpy as np
+
 from tests.conftest import TINY, make_edges
 from triangle_counting_spark.operators.components import (
     connected_components,
@@ -53,15 +55,63 @@ def test_blocked_matches_shuffle_pagerank(spark):
             assert abs(a[v] - b[v]) < 1e-12, (name, v)
 
 
-def test_blocked_resume_bit_identical(spark, tmp_path):
+def _resume_bit_identical(spark, ck, n_blocks=None):
     e = make_edges(spark, TINY["bowtie"][0])
-    ck = str(tmp_path / "ck")
-    r1 = pagerank_blocked(e, tol=1e-8, max_iter=60, checkpoint_dir=ck, checkpoint_every=5)
-    r2 = pagerank_blocked(e, tol=1e-8, max_iter=60, checkpoint_dir=ck, checkpoint_every=5)
+    kw = dict(tol=1e-8, max_iter=60, checkpoint_dir=ck, checkpoint_every=5, n_blocks=n_blocks)
+    r1 = pagerank_blocked(e, **kw)
+    r2 = pagerank_blocked(e, **kw)
     assert r2.metrics and r2.metrics[0].get("resumed")
     a = {r.v: r["rank"] for r in r1.state.collect()}
     b = {r.v: r["rank"] for r in r2.state.collect()}
     assert a == b
+
+
+def test_blocked_resume_bit_identical(spark, tmp_path):
+    # the default is one block: rounds run in the driver
+    _resume_bit_identical(spark, str(tmp_path / "ck"))
+
+
+def test_blocked_resume_bit_identical_multi_block(spark, tmp_path):
+    # two blocks: rounds run as Spark tasks
+    _resume_bit_identical(spark, str(tmp_path / "ck"), n_blocks=2)
+
+
+def _lexsort_vote(lbl_of, s, d, _w):
+    """The blocked LP vote as two lexsorts: (dst, label) runs, then runs
+    ordered by (dst, count desc, label asc), first run per dst."""
+    lbl = lbl_of[s]
+    order = np.lexsort((lbl, d))
+    dd, lbl = d[order], lbl[order]
+    new_run = np.r_[True, (dd[1:] != dd[:-1]) | (lbl[1:] != lbl[:-1])]
+    starts = np.flatnonzero(new_run)
+    cnts = np.diff(np.r_[starts, len(dd)])
+    rd, rl = dd[starts], lbl[starts]
+    w = np.lexsort((rl, -cnts, rd))
+    rd, rl = rd[w], rl[w]
+    first = np.flatnonzero(np.r_[True, rd[1:] != rd[:-1]])
+    return rd[first], rl[first].astype(np.float64)
+
+
+def test_lp_vote_matches_lexsort_vote():
+    """The one-sort vote picks the same (count desc, label asc) winner as
+    the lexsort vote, on random votes over few labels (many ties),
+    unsorted destinations, and labels up to 2^31 - 1."""
+    from triangle_counting_spark.operators.labelprop import lp_vote
+
+    vote = lp_vote()
+    rng = np.random.default_rng(7)
+    for t in range(200):
+        n, m, k = int(rng.integers(1, 60)), int(rng.integers(1, 500)), int(rng.integers(1, 6))
+        s = rng.integers(0, n, m).astype(np.int32)
+        d = rng.integers(0, n, m).astype(np.int32)
+        labels = rng.integers(0, k, n).astype(np.int64)
+        if t % 4 == 0:
+            labels += 2**31 - k
+        want_d, want_l = _lexsort_vote(labels, s, d, None)
+        got_d, got_l = vote(labels, s, d, None)
+        assert got_d.dtype == np.int64 and got_l.dtype == np.float64
+        assert np.array_equal(got_d, want_d.astype(np.int64)), t
+        assert np.array_equal(got_l, want_l), t
 
 
 def test_blocked_weighted_pagerank_matches_shuffle(spark):

@@ -184,18 +184,48 @@ def test_blocked_outputs_identical_at_one_block_and_a_wave(spark):
         assert np.array_equal(one, many)
 
 
-def test_blocked_default_is_one_block_below_edges_per_block(spark):
-    """A blocked call on a small graph runs one Python task per round."""
+def test_blocked_default_is_one_block_below_edges_per_block(spark, monkeypatch):
+    """A blocked call on a graph under EDGES_PER_BLOCK is one block, and
+    its rounds run in the driver: no Python stage and no shipped array.
+    The input is a pure-JVM K_12, so any Python stage in the call's jobs
+    would be a round's."""
+    from triangle_counting_spark.operators.components import connected_components_blocked
     from triangle_counting_spark.operators.labelprop import label_propagation_blocked
+    from triangle_counting_spark.operators.pagerank import pagerank_blocked
 
     sc = spark.sparkContext
-    e = _random_edges(spark)
-    e.count()
-    _in_group(sc, "fan-out-lp", lambda: label_propagation_blocked(e, max_iter=2).state)
-    py = [tasks for tasks, python in _stages(sc, "fan-out-lp") if python]
-    # the edge collect of a locally built input is one Python stage; each
-    # of the two rounds adds one single-task stage
-    assert py[-2:] == [1, 1], py
+    shipped = []
+    real_ship = blocked._ship_arrays
+
+    def counting_ship(*a, **kw):
+        shipped.append(a[1] if len(a) > 1 else kw["arrays"])
+        return real_ship(*a, **kw)
+
+    monkeypatch.setattr(blocked, "_ship_arrays", counting_ship)
+    e = _canonical_range_edges(spark, 12)
+    calls = {
+        "pagerank": lambda: pagerank_blocked(e, tol=-1.0, max_iter=3, assume_canonical=True),
+        "components": lambda: connected_components_blocked(e, assume_canonical=True),
+        "label_propagation": lambda: label_propagation_blocked(
+            e, max_iter=3, assume_canonical=True
+        ),
+    }
+    for name, call in calls.items():
+        group = f"one-block-{name}"
+        res = _in_group(sc, group, call)
+        assert res.iterations >= 2, (name, res.iterations)
+        stages = _stages(sc, group)
+        assert stages, name  # the edge collect
+        assert not any(python for _, python in stages), (name, stages)
+    assert shipped == []
+    # control: two blocks ship the arrays once and run a two-task Python
+    # stage per round
+    _in_group(
+        sc, "two-blocks-lp",
+        lambda: label_propagation_blocked(e, max_iter=2, n_blocks=2, assume_canonical=True),
+    )
+    assert [t for t, python in _stages(sc, "two-blocks-lp") if python] == [2, 2]
+    assert len(shipped) == 1
 
 
 def test_shipped_array_dirs_are_removed(spark):

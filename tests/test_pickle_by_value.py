@@ -82,9 +82,14 @@ def test_kernels_and_rounds_load_without_the_package(spark, monkeypatch, tmp_pat
         "four_cycles": lambda: four_cycle_count(e),
         "four_cliques": lambda: four_clique_count(e),
         "delta": lambda: triangle_count_delta(e, make_edges(spark, [(0, 7), (1, 7)])),
-        "pagerank": lambda: pagerank_blocked(e, max_iter=1).state,
-        "components": lambda: connected_components_blocked(e, max_iter=1).state,
-        "label_propagation": lambda: label_propagation_blocked(e, max_iter=1).state,
+        # one block runs its rounds in the driver; two take the task path
+        "pagerank": lambda: pagerank_blocked(e, max_iter=1, n_blocks=2).state,
+        "components": lambda: connected_components_blocked(
+            e, max_iter=1, n_blocks=2
+        ).state,
+        "label_propagation": lambda: label_propagation_blocked(
+            e, max_iter=1, n_blocks=2
+        ).state,
     }
     for name, call in calls.items():
         before = len(blobs)

@@ -145,10 +145,9 @@ def _clique_graph(spark, n: int) -> Graph:
     [
         ("pagerank", 1),
         ("components", 1),
-        # round one of label propagation votes with every vertex's own
-        # label, so each symmetrized edge is its own (dst, label) group
-        # and the vote shuffle is edge-sized too
-        ("label_propagation", 2),
+        # round one of label propagation is a min aggregate over the
+        # symmetrized edges, whose shuffle is vertex-sized
+        ("label_propagation", 1),
     ],
 )
 def test_shuffle_tier_call_symmetrizes_once(spark, query, edge_sized):

@@ -133,3 +133,21 @@ def test_delta_wide_ids_agree(spark):
     )
     assert default == rows
     assert default == _brute_triangles(pairs) - _brute_triangles(pairs[::2])
+
+
+@pytest.mark.parametrize("name", sorted(GRAPHS))
+def test_label_propagation_tiers_agree(spark, name):
+    """Shuffle-tier and blocked label propagation give the same labels
+    after the same number of rounds on raw input (duplicate and reversed
+    edges), which both canonicalize themselves."""
+    from triangle_counting_spark.operators.labelprop import (
+        label_propagation,
+        label_propagation_blocked,
+    )
+
+    pairs = GRAPHS[name]
+    raw = make_edges(spark, pairs + [(b, a) for a, b in pairs[::3]] + pairs[:5])
+    shuffle = label_propagation(raw, max_iter=5)
+    blocked = label_propagation_blocked(raw, max_iter=5)
+    assert dict(shuffle.state.collect()) == dict(blocked.state.collect())
+    assert (shuffle.iterations, shuffle.converged) == (blocked.iterations, blocked.converged)

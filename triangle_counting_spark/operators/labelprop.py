@@ -9,7 +9,10 @@ satisfy the reproducibility bar.
 
 Plan per iteration: edges ⋈ labels (shuffle on vertex id) →
 groupBy(v, label).count → per-vertex argmax via max_by over a packed
-(count, -label) struct — one aggregate, no window sort.
+(count, -label) struct — one aggregate, no window sort. Unweighted round
+one needs neither: every label is still its vertex's own id, so on
+distinct edges every vote counts 1 and the winner is the smallest
+neighbour id, one min aggregate whose shuffle is vertex-sized.
 
 Convergence: #vertices whose label changed == 0, or max_iter (LP may
 oscillate on bipartite structures; a fixed cap is standard).
@@ -61,7 +64,7 @@ def label_propagation(
             # both sides of the symmetrization read it — dedup once
             ce = canonical_edges(edges).persist(StorageLevel.MEMORY_AND_DISK)
             cached.append(ce)
-        sym_w = symmetrize(ce).select(SRC, DST, F.lit(1.0).alias("_w"))
+        sym_w = symmetrize(ce).select(SRC, DST)
     else:
         s, d = F.col(SRC).cast("long"), F.col(DST).cast("long")
         ce = (
@@ -91,7 +94,13 @@ def label_propagation(
         else F.sum("_w").alias("cnt")
     )
 
-    def step(state: DataFrame, _i: int) -> DataFrame:
+    def step(state: DataFrame, i: int) -> DataFrame:
+        if i == 1 and weight_col is None:
+            # only a fresh run reaches i == 1 (a resumed one starts later),
+            # so the state is state0: label == v, every vote counts 1
+            return sym.groupBy(F.col(DST).alias("v")).agg(
+                F.min(SRC).alias("label")
+            ).select("v", "label", F.col("v").alias("label_prev"))
         votes = (
             sym.join(state.select(F.col("v").alias(SRC), "label"), SRC)
             .groupBy(F.col(DST).alias("v"), "label")
@@ -142,11 +151,10 @@ def label_propagation_blocked(
 ) -> LoopResult:
     """CSR-blocked synchronous label propagation — the broadcast tier.
 
-    Per round each dst-block computes the per-vertex neighbor-label vote
-    argmax fully vectorized: lexsort by (dst, label) → run-length counts →
-    lexsort runs by (dst, -count, label) → first run per dst wins. Same
-    (count desc, label asc) tie-break as the shuffle tier, so the two
-    implementations agree round for round (tested).
+    Per round each dst-block takes the per-vertex neighbor-label vote
+    argmax with :func:`lp_vote`: same (count desc, label asc) tie-break as
+    the shuffle tier, so the two implementations agree round for round
+    (tested).
     """
     import numpy as np
     import pandas as pd
@@ -165,29 +173,13 @@ def label_propagation_blocked(
         empty = spark.createDataFrame([], "v long, label long")
         return LoopResult(state=empty, iterations=0, converged=True, delta=0.0)
 
-    def vote(lbl_of, s, d, _w):
-        lbl = lbl_of[s]
-        order = np.lexsort((lbl, d))
-        dd, lbl = d[order], lbl[order]
-        # run-length counts of (dst, label) pairs
-        new_run = np.r_[True, (dd[1:] != dd[:-1]) | (lbl[1:] != lbl[:-1])]
-        starts = np.flatnonzero(new_run)
-        cnts = np.diff(np.r_[starts, len(dd)])
-        rd, rl = dd[starts], lbl[starts]
-        # winner per dst: (count desc, label asc) → lexsort keys
-        # reversed-significance: label, -count, dst
-        w = np.lexsort((rl, -cnts, rd))
-        rd, rl = rd[w], rl[w]
-        first = np.flatnonzero(np.r_[True, rd[1:] != rd[:-1]])
-        return rd[first], rl[first].astype(np.float64)
-
     def update(state, dst, val):
         new = state.copy()
         new[dst] = val.astype(np.int64)
         return new, int((new != state).sum())
 
     state, iters, converged, metrics = blocked_rounds(
-        spark, g, np.arange(n, dtype=np.int64), vote, update, tol=0.0,
+        spark, g, np.arange(n, dtype=np.int64), lp_vote(), update, tol=0.0,
         max_iter=max_iter,
     )
     out_df = spark.createDataFrame(
@@ -200,6 +192,54 @@ def label_propagation_blocked(
         delta=metrics[-1]["delta"] if metrics else 0.0,
         metrics=metrics,
     )
+
+
+def lp_vote():
+    """``vote(labels, s, d, _w) -> (dsts, new_labels)``: the winning
+    label of each destination in ``d`` among the ``labels[s]`` of its
+    edges, by (count desc, label asc); ``dsts`` int64, ``new_labels``
+    float64. Labels and destinations must be compact ids (below 2^31).
+    Returned as a closure, so a task ships it by value (the pickle rule
+    in plans/blocked.py).
+
+    One composite key per vote, ``(dst << 31) | label``, sorted in place:
+    equal keys are one (dst, label) group, and groups come in (dst, label)
+    order. Run-length counts of the keys are the vote counts. Each group
+    then scores ``(count << 31) | (2^31 - 1 - label)``, the shuffle tier's
+    ``struct(cnt, -label)`` packed into one int64, and
+    ``np.maximum.reduceat`` over each dst's groups picks its winner. Every
+    array after the sort is group-sized, and at most three live at once.
+    """
+    import numpy as np
+
+    low = (1 << 31) - 1
+
+    def vote(lbl_of, s, d, _w):
+        key = d.astype(np.int64)
+        key <<= 31
+        key |= lbl_of[s]
+        key.sort()
+        m = len(key)
+        new_run = np.empty(m, dtype=bool)
+        new_run[0] = True
+        np.not_equal(key[1:], key[:-1], out=new_run[1:])
+        starts = np.flatnonzero(new_run)
+        del new_run
+        run = key[starts]
+        del key
+        score = np.diff(starts, append=m)
+        del starts
+        score <<= 31
+        rd = run >> 31
+        run &= low
+        np.subtract(low, run, out=run)
+        score |= run
+        del run
+        first = np.flatnonzero(np.r_[True, rd[1:] != rd[:-1]])
+        best = np.maximum.reduceat(score, first)
+        return rd[first], (low - (best & low)).astype(np.float64)
+
+    return vote
 
 
 def label_propagation_fixed(

@@ -99,8 +99,9 @@ def pagerank(
             # union of a directed run) — dedup once, not once per reader
             ce = ce.persist(StorageLevel.MEMORY_AND_DISK)
             cached.append(ce)
+        # no weight column: every weight would be 1.0, and the two
+        # aggregates below count / sum without it (c * 1.0 == c)
         base_edges = symmetrize(ce) if not directed else ce.select(SRC, DST)
-        base_edges = base_edges.select(SRC, DST, F.lit(1.0).alias("_w"))
     else:
         s, d = F.col(SRC).cast("long"), F.col(DST).cast("long")
         ce = (
@@ -133,9 +134,8 @@ def pagerank(
     cached.append(out_edges)
     # out_edges is hash-partitioned on src, so grouping on src shuffles
     # nothing
-    outdeg = out_edges.groupBy(F.col(SRC).alias("v")).agg(
-        F.sum("_w").alias("outdeg")
-    )
+    out_w = F.count(F.lit(1)).cast("double") if w is None else F.sum("_w")
+    outdeg = out_edges.groupBy(F.col(SRC).alias("v")).agg(out_w.alias("outdeg"))
     if vertices is None and not directed:
         # every vertex of a symmetrized edge table is some edge's src
         ledger = outdeg
@@ -214,7 +214,10 @@ def pagerank(
                 SRC,
             )
             .groupBy(F.col(DST).alias("v"))
-            .agg(F.sum(F.col("c") * F.col("_w")).alias("gathered"))
+            .agg(
+                F.sum(F.col("c") if w is None else F.col("c") * F.col("_w"))
+                .alias("gathered")
+            )
         )
         if personalized_for is None:
             # driver-side constant, float-identical to the generated SQL

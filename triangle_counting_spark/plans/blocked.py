@@ -21,9 +21,16 @@ built from the same layers, all in this module:
 4. **run**: :func:`run_slices` is the one ``mapInPandas`` shell of the
    counting kernels: one task per strided slice id ``0..fan_out-1``, each
    calling ``body(arrays, slice, k) -> int``, partials summed on the
-   driver. :func:`blocked_rounds` is the iterative shell: per round the
-   state vector is broadcast, each dst-block applies its caller's reducer,
-   and the driver applies the caller's update.
+   driver. :func:`blocked_rounds` is the iterative shell: per round each
+   dst-block applies its caller's reducer and the driver applies the
+   caller's update. A graph of at most :data:`EDGES_PER_BLOCK`
+   symmetrized edges is one block, and its reducer runs in the driver,
+   which already holds the arrays. Like the reference's in-process level
+   loop (bfs.c:7-31) and its serial kernel for small inputs
+   (tc.c:1844-1911), such a round pays no Spark job, no file shipping, no
+   broadcast and no Python-task start-up, which together cost more than
+   the gather itself. Several blocks ship the arrays once; each round then
+   broadcasts the state vector and runs one task per block.
 5. **in-kernel helpers**: :func:`csr_kernels` returns
    ``segment_offsets``, ``volume_chunks`` and ``pair_hits``, the gather,
    chunking and sorted pair-intersection steps the kernels share.
@@ -58,22 +65,27 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-# edges per block/task for work linear in its edges: a PageRank gather
-# over 4M symmetrized edges is 0.1-0.2 s of numpy, below the fixed start-up
-# cost of one Python task (PySpark's per-task file set-up, 0.2-0.4 s; both
-# measured on a 4-vCPU machine), so finer splits only add tasks
+# edges per block for work linear in its edges: a PageRank gather over 4M
+# symmetrized edges is 0.1-0.2 s of numpy, below the fixed start-up cost of
+# one Python task (PySpark's per-task file set-up, 0.2-0.4 s; both measured
+# on a 4-vCPU machine), so finer splits only add tasks. A graph of at most
+# this many symmetrized edges is one block, and blocked_rounds reduces it
+# in the driver with no task at all.
 EDGES_PER_BLOCK = 1 << 22
 
 
 def fan_out(spark: SparkSession, edges: int | None = None) -> int:
-    """Number of Python tasks for one ``mapInPandas`` fan-out.
+    """Number of Python tasks for one ``mapInPandas`` fan-out, or of
+    dst-blocks for a blocked round.
 
     ``edges=None`` is a kernel whose work grows faster than its edge count
     (wedges, two-hop gathers): it gets one full wave of
     ``defaultParallelism`` tasks — striding balances them, and more tasks
     than cores only repeat the per-task start-up. Otherwise ``edges`` is
     the symmetrized edge count of a blocked round, whose gather is linear
-    in it: one task per :data:`EDGES_PER_BLOCK`, capped at one wave.
+    in it: one block per :data:`EDGES_PER_BLOCK`, capped at one wave. A
+    result of 1 starts no task: :func:`blocked_rounds` runs a one-block
+    round in the driver.
     """
     wave = max(spark.sparkContext.defaultParallelism, 1)
     if edges is None:
@@ -328,15 +340,16 @@ def blocked_rounds(
 ) -> tuple[np.ndarray, int, bool, list[dict]]:
     """Run blocked gather-scatter rounds.
 
-    reduce(state, src, dst, weight) -> (dsts, vals): one block's gather,
-    run in its task over the block's dst-sorted edges (``weight`` is
-    ``None`` for a graph without one); a closure, shipped by value.
+    reduce(state, src, dst, weight) -> (dsts, vals): one block's gather
+    over the block's dst-sorted edges (``weight`` is ``None`` for a graph
+    without one). One block runs in the driver; more run one task each,
+    so ``reduce`` must be a closure (shipped by value).
     update(state, dsts, vals) -> (new_state, delta), run on the driver over
-    every block's rows. Returns (state, iterations, converged, metrics).
+    every block's rows, ``dsts`` int64 and ``vals`` float64 on both paths.
+    Returns (state, iterations, converged, metrics).
     """
     import time
 
-    n_blocks = g.n_blocks
     state = state0.copy()
     start_iter = 0
     metrics: list[dict] = []
@@ -350,6 +363,46 @@ def blocked_rounds(
                 return state, start_iter, True, metrics
     if start_iter >= max_iter:
         return state, start_iter, False, metrics
+
+    converged = False
+    with _block_gather(spark, g, reduce) as gather:
+        for i in range(start_iter + 1, max_iter + 1):
+            t0 = time.time()
+            state, delta = update(state, *gather(state))
+            m = {"iteration": i, "delta": float(delta), "sec": time.time() - t0}
+            if checkpoint_dir and (i % checkpoint_every == 0 or delta <= tol):
+                _write(checkpoint_dir, fingerprint, i, state, float(delta))
+                m["checkpoint"] = True
+            metrics.append(m)
+            if delta <= tol:
+                converged = True
+                break
+    return state, i, converged, metrics
+
+
+@contextmanager
+def _block_gather(spark: SparkSession, g: BlockedGraph, reduce):
+    """``gather(state) -> (dsts int64, vals float64)``: every block's
+    ``reduce`` rows, in block order, for the length of a with-block.
+
+    One block (the whole graph under :data:`EDGES_PER_BLOCK`) is reduced
+    in the driver, which already holds the arrays: no file shipped, no
+    broadcast, no Python task. More blocks ship the arrays once and run
+    one ``mapInPandas`` task per block each round, the state broadcast.
+    Both paths hand the rows over in the dtypes of the task path's
+    ``dst long, val double`` frame, so their rounds are bit-identical.
+    """
+    if g.n_blocks == 1:
+
+        def gather(state):
+            dsts, vals = reduce(state, g.src, g.dst, g.weight)
+            return (
+                np.asarray(dsts, dtype=np.int64),
+                np.asarray(vals, dtype=np.float64),
+            )
+
+        yield gather
+        return
 
     load = _make_loader()
 
@@ -371,9 +424,19 @@ def blocked_rounds(
 
     # one slice id per partition (numPartitions=n_blocks) — NO repartition:
     # an AQE shuffle here costs ~0.7 s per iteration for nothing
-    slices = spark.range(0, n_blocks, 1, numPartitions=n_blocks)
-    converged = False
-    delta = float("inf")
+    slices = spark.range(0, g.n_blocks, 1, numPartitions=g.n_blocks)
+
+    def gather(state):
+        bc_state = spark.sparkContext.broadcast(state)
+        pdf = slices.mapInPandas(
+            make_round(bc_state), schema="dst long, val double"
+        ).toPandas()
+        bc_state.destroy()
+        return (
+            pdf["dst"].to_numpy(dtype=np.int64),
+            pdf["val"].to_numpy(dtype=np.float64),
+        )
+
     with shipped_arrays(
         spark,
         {
@@ -383,26 +446,7 @@ def blocked_rounds(
             **({"weight": g.weight} if g.weight is not None else {}),
         },
     ) as graph_files:
-        for i in range(start_iter + 1, max_iter + 1):
-            t0 = time.time()
-            bc_state = spark.sparkContext.broadcast(state)
-            rows = slices.mapInPandas(
-                make_round(bc_state), schema="dst long, val double"
-            )
-            pdf = rows.toPandas()
-            bc_state.destroy()
-            state, delta = update(
-                state, pdf["dst"].to_numpy(dtype=np.int64), pdf["val"].to_numpy()
-            )
-            m = {"iteration": i, "delta": float(delta), "sec": time.time() - t0}
-            if checkpoint_dir and (i % checkpoint_every == 0 or delta <= tol):
-                _write(checkpoint_dir, fingerprint, i, state, float(delta))
-                m["checkpoint"] = True
-            metrics.append(m)
-            if delta <= tol:
-                converged = True
-                break
-    return state, i, converged, metrics
+        yield gather
 
 
 def _ship_arrays(
