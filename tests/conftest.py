@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from triangle_counting_spark.session import get_spark
@@ -16,6 +17,21 @@ def make_edges(spark, pairs):
     return spark.createDataFrame(
         [(int(a), int(b)) for a, b in pairs], "src long, dst long"
     )
+
+
+def hub_graph(seed: int = 11, n: int = 60, m: int = 240) -> list[tuple[int, int]]:
+    """Seeded random canonical edges plus one hub joined to most vertices."""
+    rng = np.random.default_rng(seed)
+    s, d = rng.integers(0, n, m), rng.integers(0, n, m)
+    pairs = {(int(min(a, b)), int(max(a, b))) for a, b in zip(s, d) if a != b}
+    pairs |= {(0, v) for v in range(1, 45)}
+    return sorted(pairs)
+
+
+def raw_pairs(pairs):
+    """``pairs`` as raw input: some edges reversed, some duplicated, which
+    every tier canonicalizes itself."""
+    return pairs + [(b, a) for a, b in pairs[::3]] + pairs[:5]
 
 
 # Known-truth tiny graphs (FIXTURES.md §3)

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import make_edges
+from tests.conftest import hub_graph, make_edges, raw_pairs
 
 
 CASES = {
@@ -15,6 +15,8 @@ CASES = {
     "two_components": [(0, 1), (1, 2), (5, 6), (6, 7), (7, 5)],
     "star": [(0, i) for i in range(1, 9)],
     "gappy_ids": [(100, 205), (205, 999), (7, 100), (3000, 4000)],
+    # reversed and duplicated edges, which each tier canonicalizes itself
+    "hub_raw": raw_pairs(hub_graph()),
 }
 
 

@@ -2,17 +2,21 @@ from __future__ import annotations
 
 import numpy as np
 
-from tests.conftest import TINY, make_edges
+from tests.conftest import TINY, hub_graph, make_edges, raw_pairs
 from triangle_counting_spark.operators.components import (
     connected_components,
     connected_components_blocked,
 )
 from triangle_counting_spark.operators.pagerank import pagerank, pagerank_blocked
 
+# the TINY fixtures, plus a hub graph as raw input (reversed and
+# duplicated edges), which each tier canonicalizes itself
+INPUTS = {**{name: t[0] for name, t in TINY.items()}, "hub_raw": raw_pairs(hub_graph())}
+
 
 def test_blocked_cc_matches_shuffle(spark):
-    for name in ("two_triangles", "bowtie", "star5"):
-        e = make_edges(spark, TINY[name][0])
+    for name in ("two_triangles", "bowtie", "star5", "hub_raw"):
+        e = make_edges(spark, INPUTS[name])
         a = {r.v: r.component for r in connected_components(e).state.collect()}
         b = {r.v: r.component for r in connected_components_blocked(e).state.collect()}
         assert a == b, name
@@ -43,8 +47,8 @@ def test_blocked_cc_long_path_few_rounds(spark):
 
 
 def test_blocked_matches_shuffle_pagerank(spark):
-    for name in ("bowtie", "two_triangles", "star5"):
-        e = make_edges(spark, TINY[name][0])
+    for name in ("bowtie", "two_triangles", "star5", "hub_raw"):
+        e = make_edges(spark, INPUTS[name])
         a = {r.v: r["rank"] for r in pagerank(e, tol=1e-10, max_iter=60).state.collect()}
         b = {
             r.v: r["rank"]

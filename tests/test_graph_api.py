@@ -82,18 +82,31 @@ def test_graph_subgraph_and_delta_methods(spark):
 
 
 def test_graph_decides_iterative_tier_once(spark, monkeypatch):
-    """The facade passes the tier it chose down to CC and LP: a pinned
-    tier asks the planner nothing, auto asks it once per call, and a
+    """The facade passes the tier it chose down to every tiered operator:
+    a pinned tier asks the planner nothing, auto asks it once per call
+    and, after the Graph's first count, runs no count job for it, and a
     pinned "shuffle" runs the shuffle tier even on a graph that fits."""
     from triangle_counting_spark.graph import Graph
     from triangle_counting_spark.operators import components, labelprop
     from triangle_counting_spark.plans import planner
 
-    calls = []
+    sc = spark.sparkContext
+    group = "graph-decides-once"
+    tracker = sc.statusTracker()
+    calls, tier_jobs = [], []  # planner calls; jobs run by each tier decision
     real = planner.choose_iterative_tier
     monkeypatch.setattr(
         planner, "choose_iterative_tier", lambda *a, **k: calls.append(1) or real(*a, **k)
     )
+    real_tier = Graph._tier
+
+    def counting_tier(self, tier):
+        before = len(tracker.getJobIdsForGroup(group))
+        out = real_tier(self, tier)
+        tier_jobs.append(len(tracker.getJobIdsForGroup(group)) - before)
+        return out
+
+    monkeypatch.setattr(Graph, "_tier", counting_tier)
     ran = []
     for mod, name in ((components, "connected_components_blocked"),
                       (labelprop, "label_propagation_blocked")):
@@ -102,15 +115,34 @@ def test_graph_decides_iterative_tier_once(spark, monkeypatch):
             mod, name, lambda *a, _f=blocked_op, _n=name, **k: ran.append(_n) or _f(*a, **k)
         )
     g = Graph(make_edges(spark, TINY["two_triangles"][0]))
-    cc = {r.v: r.component for r in g.connected_components(tier="shuffle").state.collect()}
-    lp = {r.v: r.label for r in g.label_propagation(2, tier="shuffle").collect()}
-    assert calls == [] and ran == []
-    assert cc == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 3}
-    assert lp == cc
-    g.connected_components()
-    g.label_propagation(2)
-    assert len(calls) == 2
-    assert ran == ["connected_components_blocked", "label_propagation_blocked"]
+    sc.setJobGroup(group, group)
+    try:
+        cc = {r.v: r.component for r in g.connected_components(tier="shuffle").state.collect()}
+        lp = {r.v: r.label for r in g.label_propagation(2, tier="shuffle").collect()}
+        assert calls == [] and ran == []
+        assert cc == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 3}
+        assert lp == cc
+        g.connected_components()
+        g.label_propagation(2)
+        assert len(calls) == 2
+        assert tier_jobs[:2] == [0, 0] and tier_jobs[2] >= 1 and tier_jobs[3:] == [0]
+        assert ran == ["connected_components_blocked", "label_propagation_blocked"]
+        methods = {
+            "bfs": lambda t: g.bfs(tier=t),
+            "distance_stats": lambda t: g.distance_stats(n_roots=2, tier=t),
+            "centrality": lambda t: g.centrality(n_roots=2, tier=t),
+            "betweenness": lambda t: g.betweenness(n_roots=2, tier=t),
+            "sssp": lambda t: g.sssp(root=0, tier=t),
+        }
+        for name, run in methods.items():
+            for tier, want in (("blocked", 0), ("auto", 1)):
+                calls.clear()
+                tier_jobs.clear()
+                run(tier).collect()
+                assert (len(calls), tier_jobs) == (want, [0]), (name, tier)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_bcast_cutoff_override_above_hard_cap_raises(spark):

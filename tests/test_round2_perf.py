@@ -1,10 +1,9 @@
-"""Round-2 additions: k-statistic planner, "part" strategy, vectorized
+"""Round-2 additions: triangle planner, "part" strategy, vectorized
 kernel internals, blocked embedding near-dup."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import TINY, make_edges
@@ -88,24 +87,6 @@ def test_planner_beyond_memory_always_part(spark):
     path = [(i, i + 1) for i in range(12)]  # k=0: old hybrid chose level
     c = choose_triangle_strategy(make_edges(spark, path), small_edges=1, bcast_max=1)
     assert c.strategy == "part" and c.k is None
-
-
-def test_planner_k_branches_opt_in(spark):
-    """Reference hybrid rule tc.c:1904 survives as the opt-in
-    choose_with_level: k > 0.7 → forward-hash analog, else
-    level-partitioned. Fixtures engineered for each branch with the
-    thresholds forced low so the k statistic decides."""
-    from triangle_counting_spark.plans.planner import choose_with_level
-
-    # K10: BFS from min vertex puts the other 9 on level 1 →
-    # horizontal = C(9,2)=36 of 45 edges → k = 0.8 > 0.7
-    k10 = [(a, b) for a in range(10) for b in range(a + 1, 10)]
-    c_hi = choose_with_level(make_edges(spark, k10), small_edges=1, bcast_max=1)
-    assert c_hi.strategy == "part" and c_hi.k == pytest.approx(0.8)
-    # path graph: every edge crosses levels → k = 0
-    path = [(i, i + 1) for i in range(12)]
-    c_lo = choose_with_level(make_edges(spark, path), small_edges=1, bcast_max=1)
-    assert c_lo.strategy == "level" and c_lo.k == pytest.approx(0.0)
 
 
 # ------------------------------------------------------- embedding neardup

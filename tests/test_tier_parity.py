@@ -11,10 +11,9 @@ from __future__ import annotations
 import itertools
 from collections import defaultdict
 
-import numpy as np
 import pytest
 
-from tests.conftest import TINY, make_edges
+from tests.conftest import TINY, hub_graph, make_edges, raw_pairs
 from triangle_counting_spark.operators.subgraphs import kcore_edges
 from triangle_counting_spark.operators.triangles import (
     four_cycle_count,
@@ -25,15 +24,6 @@ from triangle_counting_spark.operators.triangles import (
 CUTOFF = "spark.tcs.bcastMaxEdges"
 
 
-def _hub_graph(seed: int = 11, n: int = 60, m: int = 240) -> list[tuple[int, int]]:
-    """Seeded random canonical edges plus one hub joined to most vertices."""
-    rng = np.random.default_rng(seed)
-    s, d = rng.integers(0, n, m), rng.integers(0, n, m)
-    pairs = {(int(min(a, b)), int(max(a, b))) for a, b in zip(s, d) if a != b}
-    pairs |= {(0, v) for v in range(1, 45)}
-    return sorted(pairs)
-
-
 # every FIXTURES.md graph in one call: their disjoint union (vertex ids
 # offset per fixture), on which each count is the sum of the fixtures'
 GRAPHS = {
@@ -42,7 +32,7 @@ GRAPHS = {
         for i, name in enumerate(sorted(TINY))
         for a, b in TINY[name][0]
     ],
-    "hub": _hub_graph(),
+    "hub": hub_graph(),
 }
 
 
@@ -145,8 +135,7 @@ def test_label_propagation_tiers_agree(spark, name):
         label_propagation_blocked,
     )
 
-    pairs = GRAPHS[name]
-    raw = make_edges(spark, pairs + [(b, a) for a, b in pairs[::3]] + pairs[:5])
+    raw = make_edges(spark, raw_pairs(GRAPHS[name]))
     shuffle = label_propagation(raw, max_iter=5)
     blocked = label_propagation_blocked(raw, max_iter=5)
     assert dict(shuffle.state.collect()) == dict(blocked.state.collect())

@@ -139,25 +139,25 @@ class Graph:
     def bfs(self, roots: list[int] | None = None, tier: str = "auto") -> DataFrame:
         from .operators.bfs import bfs_levels
 
-        return bfs_levels(self.edges, roots=roots, tier=tier)
+        return bfs_levels(self.edges, roots=roots, tier=self._tier(tier))
 
     def distance_stats(self, n_roots: int = 16, tier: str = "auto") -> DataFrame:
         from .operators.distances import distance_stats
 
-        return distance_stats(self.edges, n_roots=n_roots, tier=tier)
+        return distance_stats(self.edges, n_roots=n_roots, tier=self._tier(tier))
 
     def centrality(self, n_roots: int = 16, tier: str = "auto") -> DataFrame:
         from .operators.distances import centrality
 
         return centrality(
-            self.edges, n_roots=n_roots, tier=tier, assume_canonical=True
+            self.edges, n_roots=n_roots, tier=self._tier(tier), assume_canonical=True
         )
 
     def betweenness(self, n_roots: int = 16, tier: str = "auto") -> DataFrame:
         from .operators.betweenness import betweenness
 
         return betweenness(
-            self.edges, n_roots=n_roots, tier=tier, assume_canonical=True
+            self.edges, n_roots=n_roots, tier=self._tier(tier), assume_canonical=True
         )
 
     def sssp(self, root: int | None = None, tier: str = "auto") -> DataFrame:
@@ -169,7 +169,7 @@ class Graph:
         from .operators.distances import sssp
 
         e = self.edges.select(SRC, DST, F.lit(1.0).alias("weight"))
-        return sssp(e, root=root, tier=tier)
+        return sssp(e, root=root, tier=self._tier(tier))
 
     def random_walks(
         self, length: int = 4, walks_per_vertex: int = 1, seed: int = 11
@@ -221,13 +221,18 @@ class Graph:
         )
 
     def _tier(self, tier: str) -> str:
-        if tier != "auto":
-            return tier
-        from .plans.planner import choose_iterative_tier
+        """The concrete tier every tiered method hands its operator: a
+        pinned tier as :func:`~.plans.planner.plan_tier` checks it, auto
+        from the planner's memory statistic over the kept edge count."""
+        from .plans import planner
 
+        if tier != "auto":
+            return planner.plan_tier(self.edges, tier)
         if self._m is None:
             self._m = self.edges.count()
-        return choose_iterative_tier(self.edges, assume_canonical=True, m=self._m)
+        return planner.choose_iterative_tier(
+            self.edges, assume_canonical=True, m=self._m
+        )
 
     def pagerank(self, tier: str = "auto", **kw):
         """tier: "auto" picks the CSR-blocked broadcast substrate while the
@@ -250,46 +255,36 @@ class Graph:
                     "triangle_counting_spark.operators.pagerank.pagerank() "
                     "on the original edge table instead."
                 )
-        if kw.get("personalized_for") is not None:
-            # personalization is orthogonal to canonicalization (a vertex
-            # set, not an edge property) — but only the shuffle tier
-            # implements it
-            from .operators.pagerank import pagerank
+        from .operators.pagerank import pagerank, pagerank_blocked
 
-            return pagerank(self.edges, assume_canonical=True, **kw)
-        if self._tier(tier) == "blocked":
-            from .operators.pagerank import pagerank_blocked
-
-            return pagerank_blocked(self.edges, assume_canonical=True, **kw)
-        from .operators.pagerank import pagerank
-
-        return pagerank(self.edges, assume_canonical=True, **kw)
+        # personalization is orthogonal to canonicalization (a vertex set,
+        # not an edge property) — but only the shuffle tier implements it
+        personalized = kw.get("personalized_for") is not None
+        if personalized and tier == "blocked":
+            raise ValueError(
+                "personalized_for runs only on the shuffle tier; "
+                "pass tier='shuffle' or 'auto'"
+            )
+        tier = self._tier({"auto": "shuffle"}.get(tier, tier) if personalized else tier)
+        op = pagerank_blocked if tier == "blocked" else pagerank
+        return op(self.edges, assume_canonical=True, **kw)
 
     def connected_components(self, tier: str = "auto", **kw):
-        if self._tier(tier) == "blocked":
-            from .operators.components import connected_components_blocked
-
-            return connected_components_blocked(
-                self.edges, assume_canonical=True, **kw
-            )
-        from .operators.components import connected_components
+        from .operators.components import connected_components, requested_tier
 
         return connected_components(
-            self.edges, tier="shuffle", assume_canonical=True, **kw
+            self.edges,
+            tier=self._tier(requested_tier(tier, **kw)),
+            assume_canonical=True,
+            **kw,
         )
 
     def label_propagation(self, iterations: int = 3, tier: str = "auto") -> DataFrame:
         """(v, label) after ``iterations`` synchronous rounds."""
-        if self._tier(tier) == "blocked":
-            from .operators.labelprop import label_propagation_blocked
-
-            return label_propagation_blocked(
-                self.edges, max_iter=iterations, assume_canonical=True
-            ).state
         from .operators.labelprop import label_propagation_fixed
 
         return label_propagation_fixed(
-            self.edges, iterations, tier="shuffle", assume_canonical=True
+            self.edges, iterations, tier=self._tier(tier), assume_canonical=True
         )
 
     def maximal_independent_set(self, tier: str = "auto") -> DataFrame:
@@ -350,8 +345,7 @@ class Graph:
         """(v, coreness) — every vertex's core number (h-index fixpoint)."""
         from .operators.subgraphs import coreness, coreness_blocked
 
-        t = self._tier(tier)
-        op = coreness_blocked if t == "blocked" else coreness
+        op = coreness_blocked if self._tier(tier) == "blocked" else coreness
         return op(self.edges, assume_canonical=True).state
 
     def hyperball(self, rounds: int = 4) -> DataFrame:

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.planner import plan_tier
 from .orientation import DST, SRC, canonical_edges, symmetrize
 
 
@@ -56,10 +57,7 @@ def betweenness(
     from .distances import sample_roots
 
     ce = edges.select(SRC, DST) if assume_canonical else canonical_edges(edges)
-    if tier == "auto":
-        from ..plans.planner import choose_iterative_tier
-
-        tier = choose_iterative_tier(ce, assume_canonical=True)
+    tier = plan_tier(ce, tier, assume_canonical=True)
     roots = sample_roots(ce, n_roots, assume_canonical=True)
     verts = (
         ce.select(F.col(SRC).alias("v"))
@@ -74,10 +72,8 @@ def betweenness(
     scale = float(n) / float(k) / 2.0
     if tier == "blocked":
         acc = _betweenness_blocked(ce, roots)
-    elif tier == "shuffle":
-        acc = _betweenness_shuffle(ce, roots, max_iter)
     else:
-        raise ValueError(f"unknown tier {tier!r}")
+        acc = _betweenness_shuffle(ce, roots, max_iter)
     return (
         verts.join(acc, "v", "left")
         .select(

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.iterate import LoopResult, loop
+from ..plans.planner import plan_tier
 from .orientation import DST, SRC, canonical_edges, symmetrize
 
 
@@ -204,14 +205,8 @@ def bfs_levels(
     from pyspark.storagelevel import StorageLevel
 
     ce = canonical_edges(edges)
-    if tier == "auto":
-        from ..plans.planner import choose_iterative_tier
-
-        tier = choose_iterative_tier(ce, assume_canonical=True)
-    if tier == "blocked":
+    if plan_tier(ce, tier, assume_canonical=True) == "blocked":
         return bfs_levels_blocked(ce, roots=roots, assume_canonical=True)
-    if tier != "shuffle":
-        raise ValueError(f"unknown tier {tier!r}")
     # joined every level — persist once (see pagerank.py note)
     sym = symmetrize(ce).persist(StorageLevel.MEMORY_AND_DISK)
     verts = (

@@ -21,7 +21,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.iterate import LoopResult, loop
+from ..plans.planner import plan_tier
 from .orientation import DST, SRC, canonical_edges, symmetrize
+
+
+def requested_tier(
+    tier: str,
+    max_iter: int = 200,
+    checkpoint_dir: str | None = None,
+    run_id: str | None = None,
+    **_,
+) -> str:
+    """The tier a :func:`connected_components` call hands the planner:
+    auto stays on the shuffle tier for a checkpointed call (resume
+    fingerprints are tier-specific) or a short one (under 50 rounds)."""
+    durable_or_short = checkpoint_dir is not None or run_id is not None or max_iter < 50
+    return {"auto": "shuffle"}.get(tier, tier) if durable_or_short else tier
 
 
 def connected_components(
@@ -50,16 +65,13 @@ def connected_components(
     Every cache is released before the call returns.
 
     ``tier``: "shuffle" (the hash-min + pointer-jumping dataflow below),
-    "blocked" (:func:`connected_components_blocked`), or "auto" (round 6):
-    the memory-derived
-    :func:`~triangle_counting_spark.plans.planner.choose_iterative_tier`
-    statistic picks the blocked tier while the graph fits memory — the
-    dispatch the planner module documents for CC/LP/PageRank, previously
-    wired only for louvain/hits/bfs. The converged min-id labeling is the
-    UNIQUE fixpoint, so the tiers are interchangeable on results (the
-    driver gate asserts both against the same oracle); auto only engages
-    on the plain call shape (default max_iter, no durable checkpoint —
-    resume fingerprints are tier-specific).
+    "blocked" (:func:`connected_components_blocked`), or "auto":
+    :func:`~triangle_counting_spark.plans.planner.plan_tier` picks the
+    blocked tier while the graph fits memory. The converged min-id
+    labeling is the UNIQUE fixpoint, so the tiers are interchangeable on
+    results (the driver gate asserts both against the same oracle); auto
+    only engages on a call of at least 50 rounds with no durable
+    checkpoint (resume fingerprints are tier-specific).
 
     ``use_delta``: ALLOW the changed-label frontier join, gated per round on
     measured frontier size (frontier < n/8) — the direction-optimizing-BFS
@@ -76,16 +88,18 @@ def connected_components(
     """
     from pyspark.storagelevel import StorageLevel
 
-    if (
-        tier == "auto"
-        and checkpoint_dir is None
-        and run_id is None
-        and max_iter >= 50
-    ):
-        from ..plans.planner import choose_iterative_tier
-
-        tier = choose_iterative_tier(edges, assume_canonical=assume_canonical)
+    tier = plan_tier(
+        edges,
+        requested_tier(tier, max_iter, checkpoint_dir, run_id),
+        assume_canonical=assume_canonical,
+    )
     if tier == "blocked":
+        if run_id is not None:
+            raise ValueError(
+                "run_id names a shuffle-tier checkpoint; the blocked tier "
+                "keeps its checkpoints in checkpoint_dir under the input's "
+                "fingerprint"
+            )
         return connected_components_blocked(
             edges,
             max_iter=max_iter,

@@ -27,6 +27,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.planner import plan_tier
 from .orientation import DST, SRC, canonical_edges
 from .stats import degrees
 
@@ -42,14 +43,8 @@ def densest_subgraph(
     if epsilon <= 0:
         raise ValueError("epsilon must be > 0")
     ce = canonical_edges(edges)
-    if tier == "auto":
-        from ..plans.planner import choose_iterative_tier
-
-        tier = choose_iterative_tier(ce, assume_canonical=True)
-    if tier == "blocked":
+    if plan_tier(ce, tier, assume_canonical=True) == "blocked":
         return _densest_blocked(ce)
-    if tier != "shuffle":
-        raise ValueError(f"unknown tier {tier!r}")
     return _densest_shuffle(ce, epsilon, max_rounds)
 
 

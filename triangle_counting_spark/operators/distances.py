@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.planner import plan_tier
 from .orientation import DST, SRC, canonical_edges, symmetrize
 
 
@@ -51,15 +52,10 @@ def sampled_distances(
     vertex it reaches (including (root, root, 0)). Unreached pairs absent.
     """
     ce = edges if assume_canonical else canonical_edges(edges)
-    if tier == "auto":
-        from ..plans.planner import choose_iterative_tier
-
-        tier = choose_iterative_tier(ce, assume_canonical=True)
+    tier = plan_tier(ce, tier, assume_canonical=True)
     roots = sample_roots(ce, n_roots, assume_canonical=True)
     if tier == "blocked":
         return _sampled_distances_blocked(ce, roots)
-    if tier != "shuffle":
-        raise ValueError(f"unknown tier {tier!r}")
     return _sampled_distances_shuffle(ce, roots, max_iter)
 
 
@@ -192,6 +188,7 @@ def centrality(
     bound sampled_distances already carries.
     """
     ce = edges.select(SRC, DST) if assume_canonical else canonical_edges(edges)
+    tier = plan_tier(ce, tier, assume_canonical=True)
     verts = (
         ce.select(F.col(SRC).alias("v")).union(ce.select(F.col(DST).alias("v"))).distinct()
     )
@@ -253,6 +250,11 @@ def sssp(
         .where(F.col(SRC) != F.col(DST))
         .where(F.col(SRC).isNotNull() & F.col(DST).isNotNull())
     )
+    # the tier statistic wants the CANONICAL edge count — the raw
+    # weighted table may carry both directions / duplicate rows, and
+    # claiming assume_canonical over it would inflate m up to 2x and
+    # misroute graphs near the cutoff
+    tier = plan_tier(ce.select(SRC, DST), tier)
     # NOT(w > 0) catches w <= 0 AND NULL AND NaN (NULL > 0 is NULL, and
     # Spark orders NaN above every number so NaN > 0 is true — test NaN
     # explicitly); a single NULL/NaN weight reaching the numpy kernel
@@ -272,18 +274,8 @@ def sssp(
             .limit(1)
             .collect()[0]["v"]
         )
-    if tier == "auto":
-        from ..plans.planner import choose_iterative_tier
-
-        # the tier statistic wants the CANONICAL edge count — the raw
-        # weighted table may carry both directions / duplicate rows, and
-        # claiming assume_canonical over it would inflate m up to 2x and
-        # misroute graphs near the cutoff
-        tier = choose_iterative_tier(canonical_edges(ce.select(SRC, DST)))
     if tier == "blocked":
         return _sssp_blocked(sym, int(root))
-    if tier != "shuffle":
-        raise ValueError(f"unknown tier {tier!r}")
     return _sssp_shuffle(sym, int(root), max_iter)
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.iterate import LoopResult, loop
+from ..plans.planner import plan_tier
 from .orientation import DST, SRC, directed_edges
 
 
@@ -249,11 +250,7 @@ def hits_fixed(
     """Exactly ``iterations`` synchronous HITS iterations — the
     oracle-comparable deterministic variant. ``tier``: "shuffle",
     "blocked", or "auto" (memory-derived cutoff)."""
-    if tier == "auto":
-        from ..plans.planner import choose_iterative_tier
-
-        tier = choose_iterative_tier(directed_edges(edges), assume_canonical=True)
-    if tier == "blocked":
+    if plan_tier(directed_edges(edges), tier, assume_canonical=True) == "blocked":
         return hits_blocked(edges, iterations)
     res = hits(edges, tol=-1.0, max_iter=iterations)
     return res.state

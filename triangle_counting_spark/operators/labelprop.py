@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.iterate import LoopResult, loop
+from ..plans.planner import plan_tier
 from .orientation import DST, SRC, canonical_edges, symmetrize
 
 
@@ -248,24 +249,23 @@ def label_propagation_fixed(
 ) -> DataFrame:
     """Exactly ``iterations`` synchronous rounds (oracle-comparable).
 
-    ``tier`` (round 6): "auto" routes the unweighted case through the
-    memory-derived
-    :func:`~triangle_counting_spark.plans.planner.choose_iterative_tier`
-    statistic to :func:`label_propagation_blocked` while the graph fits
-    memory — both tiers run the identical synchronous round with the
-    identical (count desc, label asc) tie-break and stop on the same
-    delta == 0 test, so they agree round for round (driver-gated against
-    one oracle; re-verified exactly at sf0.1 this round). "shuffle"
+    ``tier``: "auto" routes the unweighted case through
+    :func:`~triangle_counting_spark.plans.planner.plan_tier` to
+    :func:`label_propagation_blocked` while the graph fits memory — both
+    tiers run the identical synchronous round with the identical (count
+    desc, label asc) tie-break and stop on the same delta == 0 test, so
+    they agree round for round (driver-gated against one oracle). "shuffle"
     forces the dataflow loop; weighted votes always take it (the blocked
     tier is unweighted).
 
     ``assume_canonical``: ``edges`` are already canonical, so neither the
     planner nor either tier canonicalizes them again (see
     :func:`label_propagation`)."""
-    if tier == "auto" and weight_col is None:
-        from ..plans.planner import choose_iterative_tier
-
-        tier = choose_iterative_tier(edges, assume_canonical=assume_canonical)
+    tier = plan_tier(
+        edges,
+        {"auto": "shuffle"}.get(tier, tier) if weight_col is not None else tier,
+        assume_canonical=assume_canonical,
+    )
     if tier == "blocked" and weight_col is None:
         return label_propagation_blocked(
             edges, max_iter=iterations, assume_canonical=assume_canonical

@@ -49,6 +49,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.planner import plan_tier
 from .orientation import DST, SRC, canonical_edges
 
 
@@ -63,10 +64,7 @@ def louvain(
     """``(v: long, community: long)`` — Louvain communities of the
     undirected (optionally weighted) graph. Community ids are vertex ids
     propagated through the contraction levels (deterministic)."""
-    if tier == "auto":
-        from ..plans.planner import choose_iterative_tier
-
-        tier = choose_iterative_tier(edges)
+    tier = plan_tier(edges, tier)
     if weight_col is None:
         ce = canonical_edges(edges).select(SRC, DST, F.lit(1.0).alias("w"))
     else:
@@ -84,8 +82,6 @@ def louvain(
         )
     if tier == "blocked":
         return _louvain_blocked(ce, max_levels, max_rounds, resolution)
-    if tier != "shuffle":
-        raise ValueError(f"unknown tier {tier!r}")
     return _louvain_shuffle(ce, max_levels, max_rounds, resolution)
 
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.planner import plan_tier
 from .orientation import DST, SRC, canonical_edges, symmetrize
 
 
@@ -51,15 +52,10 @@ def maximal_independent_set(
     """
     if priority not in ("xxhash64", "md5"):
         raise ValueError(f"unknown priority {priority!r}")
-    if tier == "auto":
-        from ..plans.planner import choose_iterative_tier
-
-        tier = choose_iterative_tier(edges)
+    tier = plan_tier(edges, tier)
     ce = canonical_edges(edges)
     if tier == "blocked":
         return _mis_blocked(ce, priority)
-    if tier != "shuffle":
-        raise ValueError(f"unknown tier {tier!r}")
     return _mis_shuffle(ce, max_iter, priority)
 
 

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.planner import plan_tier
 from .orientation import DST, SRC
 
 
@@ -58,15 +59,7 @@ def minimum_spanning_forest(
     (round-latency-bound at in-memory sizes, like the shuffle coreness/SCC
     tiers — see BASELINE.md r4).
     """
-    if tier not in ("auto", "blocked", "shuffle"):
-        raise ValueError(f"unknown msf tier {tier!r}")
-    if tier == "auto":
-        from ..plans.planner import choose_iterative_tier
-
-        tier = choose_iterative_tier(
-            wedges.select(SRC, DST), assume_canonical=True
-        )
-    if tier == "blocked":
+    if plan_tier(wedges.select(SRC, DST), tier, assume_canonical=True) == "blocked":
         return _msf_blocked(wedges, weight_col)
     return _msf_shuffle(wedges, weight_col, max_iter)
 

@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.planner import plan_tier
 from .orientation import DST, SRC, directed_edges
 
 
@@ -80,14 +81,8 @@ def strongly_connected_components(
     converge — a silent partial labeling would poison downstream joins
     (the sampled_distances warn-on-truncation discipline, ADVICE r3).
     """
-    if tier not in ("auto", "blocked", "shuffle"):
-        raise ValueError(f"unknown scc tier {tier!r}")
     e0 = directed_edges(edges)
-    if tier == "auto":
-        from ..plans.planner import choose_iterative_tier
-
-        tier = choose_iterative_tier(e0, assume_canonical=True)
-    if tier == "blocked":
+    if plan_tier(e0, tier, assume_canonical=True) == "blocked":
         return _scc_blocked(e0)
     return _scc_shuffle(e0, max_outer, max_prop)
 

@@ -643,24 +643,17 @@ def _count_level(edges: DataFrame) -> DataFrame:
         cross = labeled.where(F.col("level_src") != F.col("level_dst")).select(
             SRC, DST
         )
-        # G0 kernel: forward-hash analog on the horizontal subgraph —
-        # tier picked by the same memory statistics the planner uses
-        # (NOT "auto": auto may recurse into "level")
+        # G0 kernel: forward-hash analog on the horizontal subgraph, on the
+        # strategy the planner's ladder picks for its edge count
         m_h = horiz.count()
-        from ..plans.planner import SMALL_GRAPH_EDGES, bcast_max_edges
+        from ..plans.planner import bcast_max_edges, choose_triangle_strategy
 
         if m_h == 0:
             c2 = 0
         else:
-            g0_strategy = (
-                "sql"
-                if m_h < SMALL_GRAPH_EDGES
-                else (
-                    "bcast"
-                    if m_h <= bcast_max_edges(horiz.sparkSession)
-                    else "part"
-                )
-            )
+            g0_strategy = choose_triangle_strategy(
+                horiz, assume_canonical=True, m=m_h
+            ).strategy
             c2 = int(
                 triangle_count(horiz, g0_strategy, assume_canonical=True)
                 .collect()[0]["triangles"]
@@ -1053,9 +1046,8 @@ def triangle_count(
     ``auto`` delegates to :func:`..plans.planner.choose_triangle_strategy`
     — the reference's statistic-driven hybrid (tc_bader_hybrid,
     tc.c:1844-1911): small m → codegen'd "sql"; CSR fits executor memory →
-    shuffle-free "bcast"; beyond memory the k statistic picks between the
-    forward-hash analog ("part") and the level-partitioned plan
-    (tc.c:1904: ``k > 0.7 → forward_hash else bader``).
+    shuffle-free "bcast"; beyond memory the forward-hash analog ("part").
+    The level-partitioned plan ("level") runs only when asked for by name.
     """
     ce = edges if assume_canonical else canonical_edges(edges)
     if strategy == "auto":

@@ -1,26 +1,31 @@
 """Statistic-driven strategy selection — the reference's hybrid planner.
 
-tc_bader_hybrid (tc.c:1844-1911) computes one graph statistic (k = fraction
-of BFS-horizontal edges, tc_bader_compute_k tc.c:1120-1159) and picks a
-physical algorithm: ``m < 100000 || k > 0.7 → tc_forward_hash_degreeOrder
-else tc_bader`` (tc.c:1904), with a 100k-edge recursion base (tc.h:43).
-Our planner is the DataFrame-level analog over the engine's physical
-strategies, with one Spark-specific tier the reference doesn't need: the
-broadcast-CSR cutover (a single shared-memory node always "fits" in the
-reference; on a cluster, fitting executor memory is THE plan-changing
-statistic).
+tc_bader_hybrid (tc.c:1844-1911) computes one graph statistic and makes
+one plan choice in one place: ``m < 100000 || k > 0.7 →
+tc_forward_hash_degreeOrder else tc_bader`` (tc.c:1904), with a
+100k-edge recursion base (tc.h:43). Our planner is the DataFrame-level
+analog over the engine's physical strategies, with one Spark-specific
+tier the reference doesn't need: the broadcast-CSR cutover (a single
+shared-memory node always "fits" in the reference; on a cluster,
+fitting executor memory is THE plan-changing statistic).
 
-Decision ladder (each statistic only computed if the previous didn't
-decide — k costs a BFS, exactly as the reference's compute_k does):
+Triangle ladder (:func:`choose_triangle_strategy`; the memory statistic
+is the canonical edge count m, one count job unless the caller knows m):
 
 1. m < small_edges (default 100k, tc.h:43)  → "sql"   (one codegen'd plan,
    no Python workers to spin up)
-2. m <= bcast_max (default 20M ≈ 330 MB CSR) → "bcast" (zero-shuffle
-   broadcast-CSR kernel)
-3. k > 0.7  → "part"  (co-grouped CSR blocks — the degree-ordered
+2. m <= bcast_max (memory-derived, :func:`bcast_max_edges`) → "bcast"
+   (zero-shuffle broadcast-CSR kernel)
+3. otherwise → "part" (co-grouped CSR blocks — the degree-ordered
    forward-hash analog at shuffle scale)
-   k <= 0.7 → "level" (BFS-level-partitioned, the tc_bader family: only
-   the k·m horizontal edges do intersection work)
+
+Auto never takes the reference's k statistic (the BFS-horizontal edge
+fraction, tc.c:1120-1159): the level-partitioned plan ("level", the
+tc_bader family) runs only when a caller asks for it by name.
+
+Iterative tier (:func:`plan_tier`, the one place every operator's
+``tier`` argument is resolved): "blocked" (CSR in memory) while m fits
+the same cutoff, else "shuffle".
 
 Spark's AQE then handles the *physical* runtime analogs (broadcast-vs-
 shuffle joins, skew split) inside whichever plan is chosen.
@@ -37,7 +42,6 @@ from ..operators.orientation import canonical_edges
 SMALL_GRAPH_EDGES = 100_000  # the reference's recursion/hybrid base, tc.h:43
 BCAST_MAX_EDGES = 20_000_000  # conservative FLOOR: CSR ≈ 16 B/edge → ~330 MB
 BCAST_HARD_CAP_EDGES = 256_000_000  # ~4 GB CSR — past this, always shuffle
-K_CUTOVER = 0.7  # tc.c:1904
 
 
 def bcast_max_edges(spark) -> int:
@@ -97,7 +101,7 @@ def _parse_mem(s: str) -> int:
 class PlanChoice:
     strategy: str
     m: int
-    k: float | None  # BFS-horizontal edge fraction (None if not computed)
+    k: float | None  # BFS-horizontal edge fraction: the ladder never computes it
     reason: str
 
 
@@ -120,11 +124,23 @@ def choose_iterative_tier(
     return "blocked" if m <= blocked_max_edges else "shuffle"
 
 
+def plan_tier(edges: DataFrame, tier: str, *, assume_canonical: bool = False) -> str:
+    """The iterative tier an operator runs: ``tier`` itself when pinned to
+    "blocked" or "shuffle" (no job), :func:`choose_iterative_tier` for
+    "auto". Any other name raises ``ValueError`` before a job runs."""
+    if tier in ("blocked", "shuffle"):
+        return tier
+    if tier != "auto":
+        raise ValueError(
+            f"unknown tier {tier!r}: expected 'auto', 'blocked' or 'shuffle'"
+        )
+    return choose_iterative_tier(edges, assume_canonical=assume_canonical)
+
+
 def choose_triangle_strategy(
     edges: DataFrame,
     small_edges: int = SMALL_GRAPH_EDGES,
     bcast_max: int | None = None,
-    k_cutover: float = K_CUTOVER,
     assume_canonical: bool = False,
     m: int | None = None,
 ) -> PlanChoice:
@@ -143,9 +159,7 @@ def choose_triangle_strategy(
     2,948,949,366 triangles). "level" remains an explicitly-requestable
     strategy (reference parity, exact, oracle-gated at test scale) —
     auto just never gambles on it. Skipping the k-statistic also saves
-    auto one full BFS on every beyond-memory graph; ``k_cutover`` is
-    retained for signature compatibility and opt-in experiments via
-    :func:`choose_with_level`."""
+    auto one full BFS on every beyond-memory graph."""
     if m is None:
         m = (edges if assume_canonical else canonical_edges(edges)).count()
     if bcast_max is None:
@@ -160,34 +174,4 @@ def choose_triangle_strategy(
         "part", m, None,
         f"m={m} > {bcast_max}: co-grouped CSR blocks (bounded replication; "
         "level's wedge-join shuffle is hub-product-shaped — see docstring)",
-    )
-
-
-def choose_with_level(
-    edges: DataFrame,
-    small_edges: int = SMALL_GRAPH_EDGES,
-    bcast_max: int | None = None,
-    k_cutover: float = K_CUTOVER,
-    assume_canonical: bool = False,
-) -> PlanChoice:
-    """The pre-r4 reference-faithful hybrid (tc.c:1904): beyond memory,
-    compute the horizontal-edge fraction k (one BFS) and route k <=
-    k_cutover to the level split. Kept for experiments and parity runs;
-    auto no longer uses it (see :func:`choose_triangle_strategy`)."""
-    ce = edges if assume_canonical else canonical_edges(edges)
-    base = choose_triangle_strategy(
-        ce, small_edges, bcast_max, k_cutover, assume_canonical=True
-    )
-    if base.strategy != "part":
-        return base
-    from ..operators.bfs import k_metric
-
-    k = float(k_metric(ce).collect()[0]["k"])
-    if k > k_cutover:
-        return PlanChoice(
-            "part", base.m, k,
-            f"k={k:.3f} > {k_cutover} → forward-hash analog (tc.c:1904)",
-        )
-    return PlanChoice(
-        "level", base.m, k, f"k={k:.3f} <= {k_cutover} → level-partitioned (tc.c:1904)"
     )
